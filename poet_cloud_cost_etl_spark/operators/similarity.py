@@ -12,11 +12,19 @@ Scale path: brute-force top-k is O(Q·N) — fine when the query set is
 broadcast-small. For N×N all-pairs at 100 TB, LSH bucketing (sign-bit
 buckets here; random-hyperplane in general) shrinks the join to
 within-bucket pairs, trading recall for a bounded shuffle.
+
+Engine choice is internal and decided from what a call observes, in
+exactly two places: centroid assignment is interpreted flat scoring or
+the BLAS kernel by centroid count (``_centroid_assigner``,
+``FLAT_ASSIGN_MAX_K``), and within-bucket pair scoring is the codegen
+self-join or the BLAS kernel by bucket size (``_pair_scores``,
+``GEMM_MIN_BUCKET``). No public operator takes an engine selector.
 """
 
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -96,146 +104,57 @@ def cosine_near_dup_pairs(
     id_col: str,
     vec_col: str,
     threshold: float,
-    impl: str = "block",
     n_blocks: int = 8,
 ) -> DataFrame:
-    """Embedding-cosine near-dup pairs, all-pairs exact.
+    """Embedding-cosine near-dup pairs, all-pairs exact: one
+    ``(id_a, id_b, cos_sim)`` row per pair with ``id_a < id_b`` and
+    round-6 cosine ``>= threshold``.
 
-    ``impl="expr"``: pure SQL-expression cross join — oracle-identical
-    arithmetic, but the higher-order-function fold is interpreted
-    (O(N²·d) scalar ops): fine for small N, ~25× slower than BLAS.
+    Rows are hashed into ``n_blocks`` blocks and every block pair is
+    scored by the shared BLAS kernel (``_bucket_pair_scores_gemm``):
+    each block against itself, and each row once more per other block
+    in its unordered block pair (shuffle volume N·n_blocks rows). No
+    driver materialization, no broadcast — per-task memory is bounded
+    by ~2·N/n_blocks rows, so sizing ``n_blocks`` ≈ N·d·8B /
+    executor-task-memory keeps every block pair in RAM regardless of
+    corpus size. The kernel applies the threshold before its rows
+    cross Arrow.
 
-    ``impl="blas"``: one side of the product is collect()ed to the
-    driver and broadcast as a normalized numpy matrix; each partition
-    of the other side multiplies its block against it (``mapInPandas``
-    + float64 GEMM). Fastest when the corpus fits in driver memory —
-    opt-in only, because at production corpus sizes the collect() OOMs
-    the driver (the reference's documented failure mode).
-
-    ``impl="block"`` (default): the scale path. Rows are hashed into
-    ``n_blocks`` blocks; each row is replicated once per unordered
-    block pair it belongs to (shuffle volume N·n_blocks rows), then
-    each (block_a ≤ block_b) group runs the same float64 GEMM kernel
-    via ``applyInPandas``. No driver materialization, no broadcast —
-    per-task memory is bounded by ~2·N/n_blocks rows, so sizing
-    ``n_blocks`` ≈ N·d·8B / executor-task-memory keeps every block
-    pair in RAM regardless of corpus size. All three impls round to 6
-    decimals and agree bit-for-bit.
-
-    Zero-norm convention (round 13, unified with the r12 gemm
-    kernels): a zero-norm vector's cosine is NaN in the numpy
-    kernels (``errstate`` guards silence the divide) and NULL in the
-    expr path — both fail every ``>= threshold`` comparison, so a
-    zero vector simply emits no pairs in all three impls.  Pinned by
-    ``tests/test_similarity.py`` on a zero-vector fixture; the X80
-    norm audit remains the upstream catch."""
-    if impl == "expr":
-        a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
-        b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
-        return (
-            a.crossJoin(b)
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select(
-                "id_a", "id_b", F.round(cosine("__va", "__vb"), 6).alias("cos_sim")
-            )
-            .filter(F.col("cos_sim") >= threshold)
-        )
-
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
+    Arithmetic is the expr path's: dot/(‖a‖·‖b‖) rounded to 6
+    decimals HALF_UP (``_round6_half_up`` — Spark's and DuckDB's
+    ``round``; a cosine of exactly 1/128 is 0.007813). A zero-norm
+    vector's cosine is NULL, fails every ``>= threshold`` comparison
+    and so emits no pairs."""
+    src = df.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).alias("v"),
+        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).alias("blk"),
     )
-
-    if impl == "block":
-        src = df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("v"),
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).alias("blk"),
-        )
-        # replicate each row into every unordered block pair it joins:
-        # a row in block i lands in group (min(i,j), max(i,j)) for each
-        # j — so group (i,j) holds exactly the rows of blocks i and j,
-        # and every unordered row pair appears in exactly one group.
-        exploded = src.withColumn(
-            "other", F.explode(F.array(*[F.lit(j) for j in range(n_blocks)]))
-        ).select(
-            F.least("blk", "other").alias("pb_a"),
-            F.greatest("blk", "other").alias("pb_b"),
-            "blk",
+    within = _bucket_pair_scores_gemm(src, "blk", "id", "v", min_cos=threshold)
+    # a row of block i joins group (min(i,j), max(i,j)) for every
+    # other block j — on side 0 as the lower block, side 1 as the
+    # upper — so every cross-block row pair meets in exactly one group
+    other = F.explode(F.array(*[F.lit(j) for j in range(n_blocks)]))
+    cross_rows = (
+        src.withColumn("other", other)
+        .filter(F.col("other") != F.col("blk"))
+        .select(
+            (F.least("blk", "other") * n_blocks + F.greatest("blk", "other"))
+            .alias("pb"),
             "id",
             "v",
+            (F.col("blk") > F.col("other")).cast("int").alias("side"),
         )
-
-        def _pair_gemm(pdf: pd.DataFrame) -> pd.DataFrame:
-            pa, pb = int(pdf["pb_a"].iloc[0]), int(pdf["pb_b"].iloc[0])
-            if pa == pb:
-                X = np.array(list(pdf["v"]), dtype=np.float64)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    X /= np.linalg.norm(X, axis=1, keepdims=True)
-                Xi = pdf["id"].to_numpy(dtype=np.int64)
-                sims = np.round(X @ X.T, 6)
-                ia, ib = np.nonzero((sims >= threshold) & (Xi[:, None] < Xi[None, :]))
-                return pd.DataFrame(
-                    {"id_a": Xi[ia], "id_b": Xi[ib], "cos_sim": sims[ia, ib]}
-                )
-            left = pdf[pdf["blk"] == pa]
-            right = pdf[pdf["blk"] == pb]
-            if left.empty or right.empty:
-                return pd.DataFrame({"id_a": [], "id_b": [], "cos_sim": []}).astype(
-                    {"id_a": "int64", "id_b": "int64", "cos_sim": "float64"}
-                )
-            X = np.array(list(left["v"]), dtype=np.float64)
-            Y = np.array(list(right["v"]), dtype=np.float64)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                X /= np.linalg.norm(X, axis=1, keepdims=True)
-                Y /= np.linalg.norm(Y, axis=1, keepdims=True)
-            Xi = left["id"].to_numpy(dtype=np.int64)
-            Yi = right["id"].to_numpy(dtype=np.int64)
-            sims = np.round(X @ Y.T, 6)
-            ia, ib = np.nonzero(sims >= threshold)
-            return pd.DataFrame(
-                {
-                    "id_a": np.minimum(Xi[ia], Yi[ib]),
-                    "id_b": np.maximum(Xi[ia], Yi[ib]),
-                    "cos_sim": sims[ia, ib],
-                }
-            )
-
-        return exploded.groupBy("pb_a", "pb_b").applyInPandas(_pair_gemm, out_schema)
-
-    spark = df.sparkSession
-    corpus = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).collect()
-    ids = np.array([r.id for r in corpus], dtype=np.int64)
-    mat = np.array([r.v for r in corpus], dtype=np.float64)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    b_ids = spark.sparkContext.broadcast(ids)
-    b_mat = spark.sparkContext.broadcast(mat)
-
-    def _block(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        B, Bi = b_mat.value, b_ids.value
-        for pdf in batches:
-            A = np.array(list(pdf["v"]), dtype=np.float64)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                A /= np.linalg.norm(A, axis=1, keepdims=True)
-            Ai = pdf["id"].to_numpy(dtype=np.int64)
-            sims = np.round(A @ B.T, 6)
-            ia, ib = np.nonzero((sims >= threshold) & (Ai[:, None] < Bi[None, :]))
-            yield pd.DataFrame(
-                {"id_a": Ai[ia], "id_b": Bi[ib], "cos_sim": sims[ia, ib]}
-            )
-
-    return df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).mapInPandas(
-        _block, out_schema
+    )
+    across = _bucket_pair_scores_gemm(
+        cross_rows, "pb", "id", "v", cross_col="side", min_cos=threshold
+    ).select(
+        F.least("id_a", "id_b").alias("id_a"),
+        F.greatest("id_a", "id_b").alias("id_b"),
+        "cos_e6",
+    )
+    return within.unionByName(across).select(
+        "id_a", "id_b", (F.col("cos_e6") / 1_000_000.0).alias("cos_sim")
     )
 
 
@@ -456,22 +375,14 @@ def ivf_topk(
     )
 
 
-# Above this centroid count the flat N·k assignment stops being the
-# right default: under the constant-cluster-size policy k ∝ N, so
-# flat assignment is N²/c while the tree descends b·log_b(k)
-# centroids per row. The r8 probe put flat and tree statistically
-# equal at k=64 (91.4s vs 93.9s at sf1.0) — but that was measured
-# with the INTERPRETED pair stage dominating within-bucket cost.
-# With the BLAS pair kernel the default (r10), the pair constant is
-# gone and assignment arithmetic is what remains: the r9/r10 gemm-
-# backed probes show tree ~2× faster than flat at k=64 (X137 11.4s
-# vs 20.0s at sf1.0; flat-assign auto probe 16.6× vs tree 5.4× for
-# 10× data), so the crossover moved below 64. 32 keeps the small-k
-# oracle-pinned deployments (k=8/16, where the tree's per-level
-# draw + broadcast overhead loses: 2.1s vs 1.3s at sf0.1) on the
-# flat path. (An earlier count()-based probe claimed 34.2× vs 9.2×
-# — that measurement pruned the per-row output work and is
-# superseded; see bench.py's noop-action note.)
+# Above this centroid count ``_centroid_assigner`` stops scoring
+# centroids with the interpreted flat expression and switches to the
+# BLAS ``_gemm_assign`` kernel (same flat semantics): under the
+# constant-cluster-size policy k ∝ N, so flat expr assignment is N²/c
+# interpreted ~25µs cosine evals (BENCH_SF1_r12: X167 tree 28.1s vs
+# gemm 1.7s at sf1.0). 32 keeps the small-k oracle-pinned
+# deployments (k=8/16) on the zero-shuffle broadcast expr path, where
+# the kernel's per-group Python round-trip is pure overhead.
 FLAT_ASSIGN_MAX_K = 32
 
 # The adaptive-granularity default (round 12): when an IVF-bucketed
@@ -479,9 +390,9 @@ FLAT_ASSIGN_MAX_K = 32
 # IVF_TARGET_BUCKET)) so the expected bucket size — and with it the
 # within-bucket pair volume per row — stays CONSTANT as the corpus
 # grows.  One driver-side count() sizes k (the graph.py
-# convergence-probe pattern); above FLAT_ASSIGN_MAX_K the consumer
-# must switch to tree assignment or the N·k flat scoring
-# reintroduces the quadratic the knob just removed.  The r11/r12
+# convergence-probe pattern); above FLAT_ASSIGN_MAX_K assignment
+# moves to the BLAS kernel, or the N·k interpreted flat scoring would
+# reintroduce the quadratic the knob just removed.  The r11/r12
 # staging probes measured the fixed-k alternative directly: 43×
 # (X183, k=8) and 33.9× (X168) at 10× data.
 IVF_TARGET_BUCKET = 64
@@ -495,9 +406,10 @@ IVF_TARGET_BUCKET = 64
 # ≈15 expr by 0.19s, ≈31 statistical tie (gemm by 0.08s), ≈62 gemm
 # by 0.63s, ≈125 gemm by 1.33s, ≈250 gemm by 2.77s — the kernel
 # pays for itself from ~32 rows up and the win grows with m².
-# ``pair_impl="auto"`` splits each run's buckets on this size so a
+# ``_pair_scores`` splits each run's buckets on this size so a
 # corpus with many tiny leaves and a few hot ones gets the right
-# engine PER BUCKET.
+# engine PER BUCKET. Tests force one engine by patching this value
+# (1 = all gemm, a huge value = all expr).
 GEMM_MIN_BUCKET = 32
 
 
@@ -581,7 +493,7 @@ def _sized_buckets(
     bucket_col: str,
     keep_cols: tuple[str, ...],
 ) -> DataFrame:
-    """Shared front end of the ``pair_impl="auto"`` split: one window
+    """Shared front end of the ``_pair_scores`` size split: one window
     count over the bucket key, MATERIALIZED (eager localCheckpoint)
     before the small/large arms read it. The checkpoint is not
     optional politeness: the two union arms prune different column
@@ -593,7 +505,10 @@ def _sized_buckets(
     Same pattern as margin_knn_pairs' eagerly checkpointed pair
     table; the stored footprint is one (id, vec, bucket, payload…)
     row per corpus vector — the same table SemDeDup deployments
-    materialize anyway between assignment and pairing."""
+    materialize anyway between assignment and pairing. A consumer
+    that reads the bucket table a second time (``_bucket_dups``'
+    one-row-per-vector side) passes this output to ``_pair_scores``
+    so both reads share the one checkpoint."""
     from pyspark.sql.window import Window as _W
 
     return (
@@ -611,138 +526,34 @@ def _bucket_dups(
     vec_col: str,
     bucket_col: str,
     threshold: float,
-    pair_impl: str,
 ) -> DataFrame:
     """Shared within-bucket SemDeDup duplicate stage: a vector is a
     duplicate iff some lower-id bucket-mate has round-6 cosine >=
     ``threshold``; returns one (id, bucket, is_dup) row per input
     row.
 
-    ``pair_impl="expr"``: bucket-keyed self-join + the interpreted
-    higher-order-function cosine — oracle-identical arithmetic, but
-    O(m²·d) interpreted scalar ops per bucket of size m; the
-    correctness-pinned path.
-
-    ``pair_impl="gemm"``: one ``applyInPandas`` per bucket — rows
-    normalize into a float64 matrix, ONE BLAS matmul scores every
-    pair, and the lower-id test vectorizes (the
-    cosine_near_dup_pairs(impl="block") kernel re-aimed at SemDeDup
-    leaves; round-8 verdict task 6: the within-leaf constant was
-    what buried the tree's assignment win in the 10x record).  Same
-    round-to-6 discipline; per-task memory is one bucket's matrix —
-    bounded by the constant-cluster-size policy that IS SemDeDup's
-    scaling knob.  An oversized bucket is one task; split buckets
-    by growing the leaf count, exactly as for the expr path.
-
-    ``pair_impl="auto"`` (the default at every call site since r10):
-    ONE window count over the bucket key — the same hash partitioning
-    every downstream stage needs anyway — splits the buckets at
-    ``GEMM_MIN_BUCKET`` rows; small buckets take the codegen expr
-    path, large ones the BLAS kernel, and the union is the per-bucket
-    best engine. The two branches agree to rounding: the gemm kernel
-    rounds via ``_round6_half_up`` (Spark ``F.round`` HALF_UP
-    semantics, r9 ADVICE item 1), which closes the rounding-MODE gap
-    — but BLAS's blocked/FMA dot accumulation and the JVM's
-    sequential fold can still differ by a few ulps BEFORE rounding,
-    so a cosine within ~1 ulp of a 6-decimal tie could in principle
-    round differently per engine (r10 ADVICE item 1). No such
-    boundary cosine has appeared in any oracle sweep (the r11
-    semantic-family two-leg sweep re-confirmed bit-parity on this
-    corpus); deployments that need the split point provably
-    invisible should pin ``pair_impl`` to one engine."""
-    if pair_impl == "auto":
-        sized = _sized_buckets(
-            buckets, bucket_col, (id_col, vec_col, bucket_col)
-        )
-        small = sized.filter(F.col("__m") < GEMM_MIN_BUCKET).drop("__m")
-        large = sized.filter(F.col("__m") >= GEMM_MIN_BUCKET).drop("__m")
-        return _bucket_dups(
-            small, id_col, vec_col, bucket_col, threshold, "expr"
-        ).unionByName(
-            _bucket_dups(
-                large, id_col, vec_col, bucket_col, threshold, "gemm"
-            )
-        )
-    if pair_impl == "expr":
-        a = buckets.select(
-            F.col(id_col).alias("__ida"),
-            F.col(vec_col).alias("__va"),
-            bucket_col,
-        )
-        b = buckets.select(
-            F.col(id_col).alias("__idb"),
-            F.col(vec_col).alias("__vb"),
-            bucket_col,
-        )
-        dup_ids = (
-            a.join(b, bucket_col)
-            .filter(F.col("__idb") > F.col("__ida"))
-            .filter(F.round(cosine("__va", "__vb"), 6) >= F.lit(threshold))
-            .select(F.col("__idb").alias(id_col))
-            .distinct()
-            .withColumn("__dup", F.lit(True))
-        )
-        return (
-            buckets.select(id_col, bucket_col)
-            .join(dup_ids, id_col, "left")
-            .select(
-                id_col,
-                bucket_col,
-                F.coalesce("__dup", F.lit(False)).alias("is_dup"),
-            )
-        )
-    if pair_impl != "gemm":
-        raise ValueError(
-            f"pair_impl must be auto|expr|gemm, got {pair_impl!r}"
-        )
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    bucket_field = buckets.schema[bucket_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, buckets.schema[id_col].dataType),
-            T.StructField(bucket_col, bucket_field),
-            T.StructField("is_dup", T.BooleanType()),
-        ]
+    The pairs come from ``_pair_scores`` (per-bucket expr/gemm split,
+    threshold applied inside each engine, so only duplicate pairs
+    leave the kernel); their distinct higher ids are the duplicates,
+    left-joined back onto the same checkpointed sized table the pair
+    stage reads — the assignment upstream runs once. A zero-norm
+    vector's cosine is NULL, which fails every threshold, so it is
+    never a duplicate."""
+    sized = _sized_buckets(buckets, bucket_col, (id_col, vec_col, bucket_col))
+    dup_ids = (
+        _pair_scores(sized, bucket_col, id_col, vec_col, min_cos=threshold)
+        .select(F.col("id_b").alias(id_col))
+        .distinct()
+        .withColumn("__dup", F.lit(True))
     )
-    thr = float(threshold)
-
-    def _kern(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf[id_col].to_numpy()
-        order = np.argsort(ids, kind="stable")
-        ids = ids[order]
-        X = np.array(list(pdf[vec_col].iloc[order]), dtype=np.float64)
-        # dot/(na*nb), NOT pre-normalized rows: the division order
-        # matches the SQL expression (_COS_SQL), same discipline as
-        # _bucket_pair_scores_gemm. A zero-norm side is NaN here =
-        # NULL in SQL, and NaN >= thr is False = SQL's NULL
-        # comparison dropping the pair — so a zero vector is never a
-        # duplicate under EITHER impl (the pre-normalized form mapped
-        # it to cos 0, which flipped is_dup vs expr when thr <= 0).
-        nrm = np.linalg.norm(X, axis=1)
-        denom = np.outer(nrm, nrm)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims = _round6_half_up((X @ X.T) / denom)
-        # ids ascend along the axis, so "some lower-id mate >= thr"
-        # is an any() over the strict lower triangle per row
-        with np.errstate(invalid="ignore"):
-            low = np.tril(sims >= thr, k=-1)
-        is_dup = low.any(axis=1)
-        return pd.DataFrame(
-            {
-                id_col: ids,
-                bucket_col: pdf[bucket_col].iloc[0],
-                "is_dup": is_dup,
-            }
-        )
-
     return (
-        buckets.select(id_col, vec_col, bucket_col)
-        .groupBy(bucket_col)
-        .applyInPandas(_kern, out_schema)
+        sized.select(id_col, bucket_col)
+        .join(dup_ids, id_col, "left")
+        .select(
+            id_col,
+            bucket_col,
+            F.coalesce("__dup", F.lit(False)).alias("is_dup"),
+        )
     )
 
 
@@ -753,20 +564,22 @@ def _bucket_pair_scores_gemm(
     vec_col: str,
     payload_cols: tuple[str, ...] = (),
     cross_col: str | None = None,
+    min_cos: float | None = None,
 ) -> DataFrame:
     """Shared BLAS pair-scoring kernel: one ``applyInPandas`` per
     bucket emits every candidate pair with its exact ppm cosine —
     the vectorized twin of the bucket-keyed self-join +
-    interpreted-``cosine()`` pair stage used by the X129/X137
-    family (same role the ``pair_impl="gemm"`` branch of
-    ``_bucket_dups`` plays for X28, but emitting the scored pairs
-    instead of a dup verdict, so margin windows / threshold sweeps
-    can run on top).
+    interpreted-``cosine()`` pair stage (``_bucket_pair_scores_expr``),
+    so dedup verdicts, margin windows and threshold sweeps all run on
+    top of one kernel.
 
     Output: ``(id_a, id_b, cos_e6, <p>_a, <p>_b ...)`` — one row
     per within-bucket pair with ``id_a < id_b`` (default), or per
     cross pair between ``cross_col == 0`` (a-side) and
     ``cross_col == 1`` (b-side) rows when ``cross_col`` is given.
+    With ``min_cos`` only pairs whose round-6 cosine is ``>=
+    min_cos`` are emitted (a NULL cosine never is), so a threshold
+    consumer ships its hits through Arrow instead of all m² pairs.
 
     Exactness: ``cos_e6`` follows the expr path's arithmetic —
     dot/(‖a‖·‖b‖) in float64 (NOT pre-normalized rows, so the
@@ -793,6 +606,7 @@ def _bucket_pair_scores_gemm(
     out_schema = T.StructType(fields)
     payloads = tuple(payload_cols)
     cross = cross_col
+    thr = None if min_cos is None else float(min_cos)
 
     def _empty() -> "pd.DataFrame":
         cols: dict = {
@@ -825,14 +639,17 @@ def _bucket_pair_scores_gemm(
         nb = na if cross is None else np.linalg.norm(B, axis=1)
         denom = np.outer(na, nb)
         with np.errstate(divide="ignore", invalid="ignore"):
-            sims = (A @ B.T) / denom
-        cos_e6 = np.rint(_round6_half_up(sims) * 1_000_000)
+            r6 = _round6_half_up((A @ B.T) / denom)
+        cos_e6 = np.rint(r6 * 1_000_000)
         valid = denom > 0.0
         if cross is None:
-            ii, jj = np.triu_indices(na_rows, k=1)
+            emit = np.triu(np.ones((na_rows, nb_rows), dtype=bool), k=1)
         else:
-            ii, jj = np.indices((na_rows, nb_rows))
-            ii, jj = ii.ravel(), jj.ravel()
+            emit = np.ones((na_rows, nb_rows), dtype=bool)
+        if thr is not None:
+            with np.errstate(invalid="ignore"):
+                emit &= r6 >= thr
+        ii, jj = np.nonzero(emit)
         vflat = valid[ii, jj]
         vals = pd.array(
             np.where(vflat, cos_e6[ii, jj], 0).astype(np.int64),
@@ -866,6 +683,7 @@ def _bucket_pair_scores_expr(
     vec_col: str,
     payload_cols: tuple[str, ...] = (),
     cross_col: str | None = None,
+    min_cos: float | None = None,
 ) -> DataFrame:
     """Interpreted twin of ``_bucket_pair_scores_gemm``: bucket-keyed
     self-join + the higher-order-function cosine, round-6 then the
@@ -874,7 +692,8 @@ def _bucket_pair_scores_expr(
     ``(id_a, id_b, cos_e6, <p>_a, <p>_b ...)``, within-bucket pairs
     with ``id_a < id_b`` (default) or the full a×b cross block when
     ``cross_col`` is given (0 = a-side, 1 = b-side); a zero-norm side
-    yields NULL ``cos_e6``. This is the right engine for SMALL
+    yields NULL ``cos_e6``; ``min_cos`` keeps only pairs whose round-6
+    cosine is ``>= min_cos``. This is the right engine for SMALL
     buckets, where the gemm path's per-group Arrow round-trip
     dominates its matmul win (see ``GEMM_MIN_BUCKET``)."""
     sel_a = [
@@ -897,12 +716,13 @@ def _bucket_pair_scores_expr(
     j = a_side.select(*sel_a).join(b_side.select(*sel_b), bucket_col)
     if cross_col is None:
         j = j.filter(F.col("id_a") < F.col("id_b"))
+    cos6 = F.round(cosine("__va", "__vb"), 6)
+    if min_cos is not None:
+        j = j.filter(cos6 >= F.lit(min_cos))
     return j.select(
         "id_a",
         "id_b",
-        F.round(F.round(cosine("__va", "__vb"), 6) * 1_000_000)
-        .cast("long")
-        .alias("cos_e6"),
+        F.round(cos6 * 1_000_000).cast("long").alias("cos_e6"),
         *[c for p in payload_cols for c in (f"{p}_a", f"{p}_b")],
     )
 
@@ -914,40 +734,62 @@ def _pair_scores(
     vec_col: str,
     payload_cols: tuple[str, ...] = (),
     cross_col: str | None = None,
-    pair_impl: str = "auto",
+    min_cos: float | None = None,
 ) -> DataFrame:
-    """Engine dispatcher for the within-bucket pair-scoring family
-    (X129/X137): ``"expr"`` = codegen self-join, ``"gemm"`` = BLAS
-    kernel, ``"auto"`` (default since r10, VERDICT r9 task 2) splits
-    the buckets at ``GEMM_MIN_BUCKET`` rows with one window count
-    over the bucket key and unions the per-bucket best engine. The
-    branches are arithmetic-identical (``_round6_half_up`` gives the
-    kernel Spark's ``F.round`` HALF_UP semantics), so the split point
-    never shows in the output."""
-    if pair_impl == "expr":
-        return _bucket_pair_scores_expr(
-            buckets, bucket_col, id_col, vec_col, payload_cols, cross_col
-        )
-    if pair_impl == "gemm":
-        return _bucket_pair_scores_gemm(
-            buckets, bucket_col, id_col, vec_col, payload_cols, cross_col
-        )
-    if pair_impl != "auto":
-        raise ValueError(
-            f"pair_impl must be auto|expr|gemm, got {pair_impl!r}"
-        )
+    """THE engine choice for the within-bucket pair-scoring family
+    (X28/X129/X137/X183): one window count over the bucket key splits
+    the buckets at ``GEMM_MIN_BUCKET`` rows — small buckets take the
+    codegen expr self-join, large ones the BLAS kernel — and the
+    union is the per-bucket best engine. The engines are
+    arithmetic-identical (``_round6_half_up`` gives the kernel
+    Spark's ``F.round`` HALF_UP semantics), so the split point never
+    shows in the output. ``buckets`` may already be a
+    ``_sized_buckets`` table (it carries ``__m``); it is then read
+    as is instead of being counted and checkpointed again.
+
+    Residual caveat: BLAS's blocked/FMA dot accumulation and the
+    JVM's sequential fold can differ by a few ulps BEFORE rounding,
+    so a cosine within ~1 ulp of a 6-decimal tie could round
+    differently per engine. No such boundary cosine has appeared in
+    any oracle sweep."""
     keep = [id_col, vec_col, bucket_col, *payload_cols]
     if cross_col is not None:
         keep.append(cross_col)
-    sized = _sized_buckets(buckets, bucket_col, tuple(keep))
-    small = sized.filter(F.col("__m") < GEMM_MIN_BUCKET).drop("__m")
-    large = sized.filter(F.col("__m") >= GEMM_MIN_BUCKET).drop("__m")
-    return _bucket_pair_scores_expr(
-        small, bucket_col, id_col, vec_col, payload_cols, cross_col
-    ).unionByName(
-        _bucket_pair_scores_gemm(
-            large, bucket_col, id_col, vec_col, payload_cols, cross_col
+    sized = (
+        buckets
+        if "__m" in buckets.columns
+        else _sized_buckets(buckets, bucket_col, tuple(keep))
+    )
+    small = sized.filter(F.col("__m") < GEMM_MIN_BUCKET)
+    large = sized.filter(F.col("__m") >= GEMM_MIN_BUCKET)
+    args = (bucket_col, id_col, vec_col, payload_cols, cross_col, min_cos)
+    return _bucket_pair_scores_expr(small, *args).unionByName(
+        _bucket_pair_scores_gemm(large, *args)
+    )
+
+
+def _centroid_assigner(
+    cents: DataFrame, n_centroids: int, id_col: str, vec_col: str
+) -> Callable[..., DataFrame]:
+    """THE flat-vs-gemm assignment policy, decided from the centroid
+    count: returns ``assign(df, nprobe=1)`` giving ``(id, vec,
+    centroid_id, probe_rank)`` against ``cents``. Up to
+    ``FLAT_ASSIGN_MAX_K`` centroids it is the zero-shuffle broadcast
+    expr scoring (``ivf_assign``); above, the BLAS kernel
+    (``_gemm_assign`` — FLAT SEMANTICS, bit-identical buckets by
+    test_gemm_assign_matches_expr_ivf_assign): the r12 measurements
+    showed the scaled-k cost was never assignment structure but the
+    ~25µs interpreted per-eval cosine (BENCH_SF1_r12: X167 tree 28.1s
+    vs gemm 1.7s at sf1.0). The gemm branch checkpoints the k-row
+    draw once, so several ``assign`` calls don't each replay the
+    corpus-wide TakeOrdered."""
+    if n_centroids <= FLAT_ASSIGN_MAX_K:
+        return lambda df, nprobe=1: ivf_assign(
+            df, cents, id_col, vec_col, nprobe=nprobe
         )
+    checkpointed = cents.localCheckpoint(eager=True)
+    return lambda df, nprobe=1: _gemm_assign(
+        df, checkpointed, id_col, vec_col, nprobe
     )
 
 
@@ -956,47 +798,16 @@ def _centroid_buckets(
     id_col: str,
     vec_col: str,
     n_centroids: int,
-    assign: str,
+    refine_iters: int = 0,
 ) -> DataFrame:
     """Shared bucket-assignment front end for the centroid-bucketed
-    pair family (X28/X129/X137): returns ``(id, vec, centroid_id)``
-    via flat N·k expr scoring (``ivf_assign``), the BLAS kernel
-    (``_gemm_assign`` — FLAT SEMANTICS, bit-identical buckets, the
-    engine swap proven by test_gemm_assign_matches_expr_ivf_assign),
-    or the log-depth centroid tree (``ivf_tree_assign``, a DIFFERENT
-    bucketing of the same family).  ``"auto"`` (round 12) switches
-    to the gemm kernel above ``FLAT_ASSIGN_MAX_K``: the r12
-    measurements showed the scaled-k cost was never assignment
-    structure but the ~25µs interpreted per-eval cosine — the gemm
-    engine keeps exact flat semantics (better recall than the tree's
-    approximate descent) AND removes the interpreted term
-    (BENCH_SF1_r12: X167 tree 28.1s vs gemm 1.7s at sf1.0).  The
-    tree remains the explicit opt-in for the >10⁵–10⁶-centroid
-    regime where even vectorized N·k FLOPs break the budget."""
-    if assign not in ("auto", "flat", "gemm", "tree"):
-        raise ValueError(
-            f"assign must be auto|flat|gemm|tree, got {assign!r}"
-        )
-    if assign == "auto":
-        assign = "flat" if n_centroids <= FLAT_ASSIGN_MAX_K else "gemm"
-    if assign == "tree":
-        branching = math.ceil(math.sqrt(n_centroids))
-        return ivf_tree_assign(
-            corpus, id_col, vec_col, branching=branching, depth=2
-        ).select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.col("leaf_id").alias("centroid_id"),
-        )
-    cents = ivf_centroids(corpus, id_col, vec_col, n_centroids)
-    if assign == "gemm":
-        cents = cents.localCheckpoint(eager=True)
-        return _gemm_assign(corpus, cents, id_col, vec_col, 1).select(
-            id_col, vec_col, "centroid_id"
-        )
-    return ivf_assign(corpus, cents, id_col, vec_col, nprobe=1).select(
-        id_col, vec_col, "centroid_id"
-    )
+    pair family (X28/X129/X137/X183): ``(id, vec, centroid_id)``, each
+    vector in its nearest deterministic IVF centroid's bucket (the
+    ``ivf_centroids`` draw, Lloyd-refined ``refine_iters`` times),
+    assigned by the ``_centroid_assigner`` policy."""
+    cents = ivf_centroids(corpus, id_col, vec_col, n_centroids, refine_iters)
+    assign = _centroid_assigner(cents, n_centroids, id_col, vec_col)
+    return assign(corpus).select(id_col, vec_col, "centroid_id")
 
 
 def semantic_dedup(
@@ -1006,89 +817,39 @@ def semantic_dedup(
     n_centroids: int = 8,
     threshold: float = 0.95,
     refine_iters: int = 0,
-    assign: str = "auto",
-    pair_impl: str = "auto",
 ) -> DataFrame:
     """X28: SemDeDup-style embedding near-duplicate pruning (Abbas et
     al. 2023, "SemDeDup: Data-efficient learning at web-scale through
     semantic deduplication"). Vectors are clustered (deterministic
-    IVF centroids, §X8); within each cluster a vector is a duplicate
-    iff some lower-id cluster-mate has cosine >= ``threshold``.
-    Lowest id wins — the same canonical-survivor rule as the text
-    dedup family (operators/dedup.py).
+    IVF centroids, §X8, Lloyd-refined ``refine_iters`` times); within
+    each cluster a vector is a duplicate iff some lower-id
+    cluster-mate has cosine >= ``threshold``. Lowest id wins — the
+    same canonical-survivor rule as the text dedup family
+    (operators/dedup.py).
 
     Returns ``(id, centroid_id, is_dup)``, one row per corpus vector.
 
-    Scale: pair generation never goes corpus-wide — the self-join is
-    keyed on ``centroid_id``, so the pair count is sum over clusters
-    of |c|^2, not N^2. SemDeDup's scaling knob is cluster
-    granularity: grow ``n_centroids`` proportionally to N (k ~ N /
+    Scale: pair generation never goes corpus-wide — pairs are keyed
+    on ``centroid_id``, so the pair count is sum over clusters of
+    |c|^2, not N^2. SemDeDup's scaling knob is cluster granularity:
+    grow ``n_centroids`` proportionally to N (k ~ N /
     target_cluster_size) and per-cluster work stays constant while
-    the join parallelizes across clusters; an oversized cluster is an
-    AQE-skew-splittable partition, same as the hot-shingle path in
-    dedup.lsh_candidate_pairs. The duplicate-id set is deduplicated
-    before the final membership join, so the output is one row per
-    vector regardless of how many near neighbors each dup has.
-
-    ``assign`` picks the assignment engine: ``"flat"`` is the N·k
-    scoring above (the explicit small-k / control path), ``"tree"``
-    delegates to ``semantic_dedup_tree`` (log-depth descent,
-    branching = ceil(sqrt(n_centroids)), depth 2 — same dup rule,
-    leaf relabeled ``centroid_id``), and the default ``"auto"``
-    switches off interpreted flat scoring once ``n_centroids >
-    FLAT_ASSIGN_MAX_K`` — since round 12 to the ``"gemm"`` kernel
-    (see the Round 12 paragraph below; r7–r11 it picked the tree:
-    flat-k measured 34.2× at 10× data vs tree 9.2×,
-    BENCH_SF1_r07.json). Flat and tree
-    bucket the space differently — both are approximations of the
-    same SemDeDup family; the bucketing is the documented recall
-    knob. ``refine_iters`` (Lloyd refinement of the centroid draw)
-    applies to the flat/gemm paths and is rejected with the tree
-    engine (the tree draw is per-node, un-refined) rather than
-    silently ignored.
-
-    Round 12: ``"auto"`` above FLAT_ASSIGN_MAX_K now picks
-    ``"gemm"`` — the BLAS twin of flat assignment (bit-identical
-    buckets, test_gemm_assign_matches_expr_ivf_assign) — instead of
-    the tree: the r12 measurements showed the scaled-k cost was the
-    ~25µs interpreted per-eval cosine, not assignment structure, so
-    the gemm engine keeps exact flat semantics (better recall than
-    the tree's approximate descent) and removes the interpreted
-    term. ``"tree"`` stays the explicit dial for the
-    >10⁵–10⁶-centroid regime where even vectorized N·k FLOPs break
-    the budget.
-    """
-    if assign not in ("auto", "flat", "gemm", "tree"):
-        raise ValueError(
-            f"assign must be auto|flat|gemm|tree, got {assign!r}"
-        )
-    if assign == "auto":
-        assign = "flat" if n_centroids <= FLAT_ASSIGN_MAX_K else "gemm"
-    if assign == "tree":
-        if refine_iters:
-            raise ValueError(
-                "refine_iters is a flat-assignment knob; the tree draw "
-                "is per-node and un-refined — use assign='flat' to refine"
-            )
-        branching = math.ceil(math.sqrt(n_centroids))
-        return semantic_dedup_tree(
-            corpus, id_col, vec_col, branching=branching, depth=2,
-            threshold=threshold, pair_impl=pair_impl,
-        ).select(
-            id_col,
-            F.col("leaf_id").alias("centroid_id"),
-            "is_dup",
-        )
-    cents = ivf_centroids(corpus, id_col, vec_col, n_centroids, refine_iters)
-    if assign == "gemm":
-        assigned = _gemm_assign(
-            corpus, cents.localCheckpoint(eager=True), id_col, vec_col, 1
-        )
-    else:
-        assigned = ivf_assign(corpus, cents, id_col, vec_col, nprobe=1)
-    return _bucket_dups(
-        assigned, id_col, vec_col, "centroid_id", threshold, pair_impl
+    the pair stage parallelizes across clusters. The engines follow
+    from what the call observes: assignment is flat expr scoring up
+    to ``FLAT_ASSIGN_MAX_K`` centroids and the BLAS kernel above
+    (``_centroid_assigner``); each cluster is scored by the codegen
+    expr self-join below ``GEMM_MIN_BUCKET`` rows and by the BLAS
+    kernel from there up (``_pair_scores``). The duplicate-id set is
+    deduplicated before the final membership join, so the output is
+    one row per vector regardless of how many near neighbors each dup
+    has. For the >10⁵–10⁶-centroid regime, where even vectorized N·k
+    FLOPs break the budget, ``semantic_dedup_tree`` buckets by the
+    log-depth centroid tree instead (a different bucketing of the
+    same family)."""
+    assigned = _centroid_buckets(
+        corpus, id_col, vec_col, n_centroids, refine_iters
     )
+    return _bucket_dups(assigned, id_col, vec_col, "centroid_id", threshold)
 
 
 def hard_negatives(
@@ -1696,7 +1457,6 @@ def semantic_dedup_tree(
     branching: int = 8,
     depth: int = 2,
     threshold: float = 0.95,
-    pair_impl: str = "auto",
 ) -> DataFrame:
     """X28 at scale: SemDeDup over the log-depth centroid tree.
     Identical duplicate semantics to ``semantic_dedup`` (within-
@@ -1710,9 +1470,7 @@ def semantic_dedup_tree(
 
     Returns ``(id, leaf_id, is_dup)``, one row per corpus vector."""
     leaves = ivf_tree_assign(corpus, id_col, vec_col, branching, depth)
-    return _bucket_dups(
-        leaves, id_col, vec_col, "leaf_id", threshold, pair_impl
-    )
+    return _bucket_dups(leaves, id_col, vec_col, "leaf_id", threshold)
 
 
 def index_shard_plan(
@@ -2150,8 +1908,6 @@ def cosine_threshold_calibration(
         800_000,
         950_000,
     ),
-    pair_impl: str = "auto",
-    assign: str = "auto",
 ) -> DataFrame:
     """X137: semantic-dedup threshold calibration — the operating
     table you read before picking X28's ``threshold``: over the
@@ -2171,20 +1927,15 @@ def cosine_threshold_calibration(
     Scale: candidate generation is the X28 shape — centroid-keyed
     self-join, never all-pairs; the threshold sweep is ONE explode
     over the pair table (|thresholds|×pairs rows), not |thresholds|
-    passes; the output is |thresholds| rows.  ``pair_impl="gemm"``
-    swaps the interpreted per-pair cosine for the shared BLAS
-    bucket kernel (``_bucket_pair_scores_gemm``) — the r9 10×
-    probe showed the interpreted pair stage dominating (13.2× at
-    constant bucket size); the sweep and aggregation are unchanged,
-    so both impls are bit-identical by test; ``"auto"`` (default
-    since r10) splits the buckets at ``GEMM_MIN_BUCKET`` via
-    ``_pair_scores``.  ``assign`` picks the bucket-assignment engine
-    (flat N·k vs log-depth tree) with the X28 auto policy — once the
-    pair stage is GEMM-cheap, flat assignment's N·k growth is what
-    remains superlinear when k must scale with N."""
+    passes; the output is |thresholds| rows.  Buckets and pair
+    engines follow the X28 policies (``_centroid_assigner``,
+    ``_pair_scores``): the r9 10× probe showed the interpreted pair
+    stage dominating (13.2× at constant bucket size), which the BLAS
+    kernel on large buckets removes; the engines are bit-identical
+    by test."""
     labels = corpus.select(F.col(id_col), F.col(label_col))
     assigned = (
-        _centroid_buckets(corpus, id_col, vec_col, n_centroids, assign)
+        _centroid_buckets(corpus, id_col, vec_col, n_centroids)
         .join(labels, id_col)
         .select(
             F.col(id_col).alias("__id"),
@@ -2199,7 +1950,6 @@ def cosine_threshold_calibration(
         "__id",
         "__v",
         payload_cols=("__lab",),
-        pair_impl=pair_impl,
     ).select(
         F.col("cos_e6").alias("__cos_e6"),
         (F.col("__lab_a") == F.col("__lab_b")).alias("__same"),
@@ -2253,8 +2003,6 @@ def margin_knn_pairs(
     n_centroids: int = 8,
     k: int = 4,
     top_pairs: int = 20,
-    pair_impl: str = "auto",
-    assign: str = "auto",
 ) -> DataFrame:
     """X129: margin-based nearest-neighbor pair mining (Artetxe &
     Schwenk 2019, the LASER bitext-mining criterion): a cross-group
@@ -2276,24 +2024,20 @@ def margin_knn_pairs(
     Scale: candidates are centroid-bucketed (the X28 shape — never
     the full G0×G1 cross join); the two avgₖ windows are keyed on
     x / y respectively; top-``top_pairs`` goes through
-    TakeOrderedAndProject.  ``pair_impl="gemm"`` scores each
-    bucket's G0×G1 block with one BLAS matmul
-    (``_bucket_pair_scores_gemm``, cross mode) instead of the
-    interpreted per-pair cosine — the r9 10× probe put the expr
-    pair stage at 18.6× for 10× data at constant bucket size, and
-    the per-pair interpreter constant is that gap; the margin
-    windows and final ranking are shared, so both impls are
-    bit-identical by test; ``"auto"`` (default since r10) splits the
-    buckets at ``GEMM_MIN_BUCKET`` via ``_pair_scores``.  ``assign``
-    picks the bucket-assignment engine (flat N·k vs log-depth tree)
-    with the X28 auto policy."""
+    TakeOrderedAndProject.  Buckets and pair engines follow the X28
+    policies (``_centroid_assigner``, ``_pair_scores`` in cross
+    mode): a large bucket's G0×G1 block is one BLAS matmul instead
+    of interpreted per-pair cosines — the r9 10× probe put the expr
+    pair stage at 18.6× for 10× data at constant bucket size; the
+    margin windows and final ranking are shared, and the engines are
+    bit-identical by test."""
     from pyspark.sql.window import Window
 
     labels = corpus.select(
         F.col(id_col), (F.col(label_col) % 2).alias("__g")
     )
     assigned = (
-        _centroid_buckets(corpus, id_col, vec_col, n_centroids, assign)
+        _centroid_buckets(corpus, id_col, vec_col, n_centroids)
         .join(labels, id_col)
         .select(
             F.col(id_col).alias("__id"),
@@ -2309,7 +2053,6 @@ def margin_knn_pairs(
             "__id",
             "__v",
             cross_col="__g",
-            pair_impl=pair_impl,
         )
         .select("id_a", "id_b", "cos_e6")
         .localCheckpoint(eager=True)
@@ -2410,9 +2153,9 @@ def semantic_decontamination(
     form at 8.35× for 10× data, the X183 class): ``n_centroids=None``
     derives k = max(8, ceil(N / IVF_TARGET_BUCKET)) so bucket size —
     and the per-candidate pair volume — stays constant as the corpus
-    grows.  At k ≤ FLAT_ASSIGN_MAX_K assignment is the flat broadcast
-    expr scoring; above it both sides assign through the BLAS
-    ``_gemm_assign`` kernel (same round-6/tie-break comparator;
+    grows.  Both sides assign by the ``_centroid_assigner`` policy:
+    flat broadcast expr scoring up to FLAT_ASSIGN_MAX_K, the BLAS
+    ``_gemm_assign`` kernel above (same round-6/tie-break comparator;
     N·k·d float64 FLOPs instead of N·k ~25µs interpreted cosine
     evals — the tree experiment this replaced spent its time on
     interpreted per-level scoring, BENCH_SF1_r12 history).  A real
@@ -2426,38 +2169,18 @@ def semantic_decontamination(
         )
     bench = emb.filter((F.col(id_col) % bench_mod) == 0)
     cand = emb.filter((F.col(id_col) % bench_mod) != 0)
-    if n_centroids <= FLAT_ASSIGN_MAX_K:
-        cents = ivf_centroids(emb, id_col, vec_col, n_centroids)
-        cand_b = ivf_assign(cand, cents, id_col, vec_col, nprobe=1).select(
-            F.col(id_col), F.col(vec_col).alias("__cv"), "centroid_id"
-        )
-        bench_b = ivf_assign(
-            bench, cents, id_col, vec_col, nprobe=nprobe
-        ).select(
-            F.col(id_col).alias("__bid"),
-            F.col(vec_col).alias("__bv"),
-            "centroid_id",
-        )
-    else:
-        # adaptive-k regime: BLAS assignment (same round-6/tie-break
-        # comparator as the flat expr path — _gemm_assign docstring).
-        # The k-row centroid draw is checkpointed so the two kernel
-        # calls don't each replay the corpus TakeOrdered.
-        cents = ivf_centroids(
-            emb, id_col, vec_col, n_centroids
-        ).localCheckpoint(eager=True)
-        cand_b = _gemm_assign(cand, cents, id_col, vec_col, 1).select(
-            F.col(id_col),
-            F.col(vec_col).alias("__cv"),
-            "centroid_id",
-        )
-        bench_b = _gemm_assign(
-            bench, cents, id_col, vec_col, nprobe
-        ).select(
-            F.col(id_col).alias("__bid"),
-            F.col(vec_col).alias("__bv"),
-            "centroid_id",
-        )
+    assign = _centroid_assigner(
+        ivf_centroids(emb, id_col, vec_col, n_centroids),
+        n_centroids, id_col, vec_col,
+    )
+    cand_b = assign(cand).select(
+        F.col(id_col), F.col(vec_col).alias("__cv"), "centroid_id"
+    )
+    bench_b = assign(bench, nprobe).select(
+        F.col(id_col).alias("__bid"),
+        F.col(vec_col).alias("__bv"),
+        "centroid_id",
+    )
     thr = F.lit(threshold)
     return (
         cand_b.join(bench_b, "centroid_id")
@@ -2514,12 +2237,12 @@ def ivf_nprobe_recall_curve(
     ``query_mod`` remains as an explicit opt-in diagnostic.  Ground
     truth is then |Q|·N work — linear.  ``n_centroids=None`` derives
     k = max(8, ceil(N / IVF_TARGET_BUCKET)) so bucket size stays
-    constant; above FLAT_ASSIGN_MAX_K ground truth runs through the
-    BLAS ``_gemm_topk`` kernel and assignment (corpus rank-1,
-    queries at max(nprobes)) through ``_gemm_assign`` — identical
-    round-6/tie-break comparators, float64 matmuls instead of the
-    ~25µs-per-eval interpreted cosine that dominated the tree
-    experiment (BENCH_SF1_r12 history) — every term linear in N."""
+    constant; ground truth runs through the BLAS ``_gemm_topk``
+    kernel and assignment (corpus rank-1, queries at max(nprobes))
+    by the ``_centroid_assigner`` policy — identical round-6/tie-break
+    comparators, float64 matmuls instead of the ~25µs-per-eval
+    interpreted cosine that dominated the tree experiment
+    (BENCH_SF1_r12 history) — every term linear in N."""
     from pyspark.sql.window import Window
 
     if n_centroids is None:
@@ -2541,57 +2264,36 @@ def ivf_nprobe_recall_curve(
             .localCheckpoint(eager=True)
         )
     maxp = max(nprobes)
-    if n_centroids <= FLAT_ASSIGN_MAX_K:
-        truth = brute_force_topk(queries, emb, id_col, vec_col, k).select(
-            "query_id", "neighbor_id"
-        )
-        cents = ivf_centroids(emb, id_col, vec_col, n_centroids)
-        lists = ivf_assign(emb, cents, id_col, vec_col, nprobe=1).select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("__cv"),
-            "centroid_id",
-        )
-        probes = ivf_assign(
-            queries, cents, id_col, vec_col, nprobe=maxp
-        ).select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__qv"),
-            "centroid_id",
-            "probe_rank",
-        )
-    else:
-        # adaptive-k regime: BLAS ground truth + BLAS assignment
-        # (same round-6/tie-break comparator as the expr path — see
-        # _gemm_topk/_gemm_assign; the interpreted higher-order
-        # cosine at this scale was the measured ~30s term).
-        # probe_rows: the default query draw is exactly n_queries
-        # rows, so the kernel can bound its |Q|*G replication
-        # shuffle (r14, ADVICE r13); the query_mod opt-in diagnostic
-        # has data-dependent |Q| and keeps the parallelism default.
-        truth = _gemm_topk(
-            queries,
-            emb,
-            id_col,
-            vec_col,
-            k,
-            probe_rows=None if query_mod is not None else int(n_queries),
-        ).select("query_id", "neighbor_id")
-        cents = ivf_centroids(
-            emb, id_col, vec_col, n_centroids
-        ).localCheckpoint(eager=True)
-        lists = _gemm_assign(emb, cents, id_col, vec_col, 1).select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("__cv"),
-            "centroid_id",
-        )
-        probes = _gemm_assign(
-            queries, cents, id_col, vec_col, maxp
-        ).select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__qv"),
-            "centroid_id",
-            "probe_rank",
-        )
+    # BLAS ground truth at every size: bit-identical rows to
+    # brute_force_topk by test_gemm_topk_matches_brute_force, and the
+    # same routing _knn_edges uses for its exact pass.  probe_rows:
+    # the default query draw is exactly n_queries rows, so the kernel
+    # can bound its |Q|*G replication shuffle (r14, ADVICE r13); the
+    # query_mod opt-in diagnostic has data-dependent |Q| and keeps
+    # the parallelism default.
+    truth = _gemm_topk(
+        queries,
+        emb,
+        id_col,
+        vec_col,
+        k,
+        probe_rows=None if query_mod is not None else int(n_queries),
+    ).select("query_id", "neighbor_id")
+    assign = _centroid_assigner(
+        ivf_centroids(emb, id_col, vec_col, n_centroids),
+        n_centroids, id_col, vec_col,
+    )
+    lists = assign(emb).select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("__cv"),
+        "centroid_id",
+    )
+    probes = assign(queries, maxp).select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("__qv"),
+        "centroid_id",
+        "probe_rank",
+    )
     # ONE candidate table at max nprobe, re-ranked per sweep point
     cand = (
         probes.join(lists, "centroid_id")
@@ -2687,35 +2389,20 @@ def _knn_edges(
         # lists (side 1) through the X129/X137 _pair_scores engine —
         # a (q, n) candidate appears exactly once (n lives in ONE
         # list; q probes it or not), so no cross-bucket dedup is
-        # needed, and pair_impl="auto" gives the bucket-size-split
-        # BLAS kernel (bit-identical to the expr path by the
-        # _pair_scores contract; ranking by cos_e6 is the same
+        # needed, and _pair_scores' bucket-size split gives the BLAS
+        # kernel on large buckets (bit-identical to the expr path by
+        # the _pair_scores contract; ranking by cos_e6 is the same
         # round-6 comparator scaled to ppm).
-        cents = ivf_centroids(emb, id_col, vec_col, n_centroids)
-        if n_centroids > FLAT_ASSIGN_MAX_K:
-            # scaled-k regime (k ∝ N): BLAS assignment — the flat
-            # expr scoring here is N·k ~25µs interpreted cosines,
-            # the same term the r12 X167/X168 fixes measured and
-            # removed (round-6/tie-break comparator identical by
-            # the _gemm_assign contract).
-            cents = cents.localCheckpoint(eager=True)
-            lists = _gemm_assign(emb, cents, id_col, vec_col, 1).select(
-                F.col(id_col), F.col(vec_col), "centroid_id"
-            ).withColumn("__side", F.lit(1))
-            probes = _gemm_assign(
-                emb, cents, id_col, vec_col, nprobe
-            ).select(
-                F.col(id_col), F.col(vec_col), "centroid_id"
-            ).withColumn("__side", F.lit(0))
-        else:
-            lists = ivf_assign(emb, cents, id_col, vec_col, nprobe=1).select(
-                F.col(id_col), F.col(vec_col), "centroid_id"
-            ).withColumn("__side", F.lit(1))
-            probes = ivf_assign(
-                emb, cents, id_col, vec_col, nprobe=nprobe
-            ).select(
-                F.col(id_col), F.col(vec_col), "centroid_id"
-            ).withColumn("__side", F.lit(0))
+        assign = _centroid_assigner(
+            ivf_centroids(emb, id_col, vec_col, n_centroids),
+            n_centroids, id_col, vec_col,
+        )
+        lists = assign(emb).select(
+            F.col(id_col), F.col(vec_col), "centroid_id"
+        ).withColumn("__side", F.lit(1))
+        probes = assign(emb, nprobe).select(
+            F.col(id_col), F.col(vec_col), "centroid_id"
+        ).withColumn("__side", F.lit(0))
         scores = _pair_scores(
             probes.unionByName(lists),
             "centroid_id",
@@ -2846,7 +2533,6 @@ def srp_cosine_calibration(
     vec_col: str,
     bits: int = 16,
     n_centroids: int | None = None,
-    assign: str = "auto",
 ) -> DataFrame:
     """X183: signed-random-projection (SimHash-for-cosine) estimator
     calibration — the cosine-sketch member of the calibration family
@@ -2877,12 +2563,11 @@ def srp_cosine_calibration(
     the fixed-k=8 form quadratic (43× at 10× data vs 13.1× scaled).
     Passing an explicit ``n_centroids`` pins the granularity (the
     fixed-k mis-deployment is an opt-in diagnostic, not the default).
-    Assignment routes through ``_centroid_buckets`` with
-    ``assign="auto"``: flat N·k scoring up to FLAT_ASSIGN_MAX_K, the
-    ``_gemm_assign`` BLAS kernel above it (r12 policy —
-    bit-identical flat buckets, so the flat-modeled DuckDB oracle
-    holds at every k; the log-depth tree is a DIFFERENT bucketing
-    and stays an explicit opt-in dial).  The one-job ``count()`` that
+    Assignment routes through ``_centroid_buckets``: flat N·k
+    scoring up to FLAT_ASSIGN_MAX_K, the ``_gemm_assign`` BLAS kernel
+    above it (r12 policy — bit-identical flat buckets, so the
+    flat-modeled DuckDB oracle holds at every k).  The one-job
+    ``count()`` that
     sizes k is the same driver-side pattern as the CC convergence
     probes (operators/graph.py) — an action, not a collect, and the
     result is a single long."""
@@ -2906,19 +2591,15 @@ def srp_cosine_calibration(
     )
     # _centroid_buckets returns (id, vec, centroid_id) — flat rank-1
     # ivf_assign up to FLAT_ASSIGN_MAX_K centroids, the gemm kernel
-    # above (assign="auto", the r12 X28 policy: flat buckets
-    # bit-for-bit, tree only as explicit opt-in).  Re-attach the bit
-    # arrays
-    # by id, then score within-bucket pairs through the X129/X137
-    # _pair_scores engine (pair_impl="auto": BLAS kernel on big
+    # above (the r12 X28 policy: flat buckets bit-for-bit).
+    # Re-attach the bit arrays by id, then score within-bucket pairs
+    # through the X129/X137 _pair_scores engine (BLAS kernel on big
     # buckets, codegen on small — bit-identical cos_e6 by the
     # _pair_scores contract; the bit arrays ride along as a payload
     # column). cos_e6/1e6 is the SAME double as round(cos, 6) — both
     # are the nearest double to the same 6-decimal value — so the
     # band/acos arithmetic is unchanged from the expr form.
-    assigned = _centroid_buckets(
-        emb, id_col, vec_col, n_centroids, assign
-    ).join(withbits.select(F.col(id_col), F.col("__bits")), id_col)
+    assigned = _centroid_buckets(emb, id_col, vec_col, n_centroids).join(withbits.select(F.col(id_col), F.col("__bits")), id_col)
     pairs = _pair_scores(
         assigned, "centroid_id", id_col, vec_col, payload_cols=("__bits",)
     ).select(

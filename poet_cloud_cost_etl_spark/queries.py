@@ -30,12 +30,14 @@ from datetime import datetime
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from .accounts import Account, AccountRegistry
 from .catalog import table
 from .operators.normalize import normalize_mapped
 from .operators.union_view import create_costs_view
+from .sources.base import fixture_sources
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 
@@ -82,45 +84,36 @@ def dollars(sum_cents: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def events_as_costs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Normalize the ``events`` fixture into the 9-column costs schema
-    (events.user_id→account, event_type→service, value→cost). This is
-    the engine's stand-in for one CUR report path
+def _fixture_costs(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    cost_type: T.DataType | None = None,
+) -> DataFrame:
+    """Normalize fixture source ``name`` (``sources.base.fixture_sources``:
+    its read, cost mapping and provider) into the 9-column costs
+    schema — the engine's stand-in for one CUR report path
     (reference main.py:75-122 loop body)."""
-    ev = table(spark, sf_dir, "events")
+    src = {s.name: s for s in fixture_sources(sf_dir)}[name]
     return normalize_mapped(
-        ev,
-        source_table="events",
-        mapping={
-            "date": F.col("ts").cast("date"),
-            "account_id": F.col("user_id").cast("string"),
-            "service": F.col("event_type"),
-            "region": F.lit(None),
-            "cost": F.col("value"),
-            "currency": F.lit("USD"),
-        },
-        cloud_provider="aws",
+        src.read(spark),
+        source_table=src.name,
+        mapping=src.cost_mapping(),
+        cloud_provider=src.cloud_provider(),
         sync_timestamp=SYNC_TS,
+        cost_type=cost_type,
     )
+
+
+def events_as_costs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``events`` fixture as aws costs (user_id→account,
+    event_type→service, value→cost)."""
+    return _fixture_costs(spark, sf_dir, "events")
 
 
 def orders_as_costs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second 'report path': orders as a different provider's costs."""
-    o = table(spark, sf_dir, "orders")
-    return normalize_mapped(
-        o,
-        source_table="orders",
-        mapping={
-            "date": F.col("o_orderdate").cast("date"),
-            "account_id": F.col("o_custkey").cast("string"),
-            "service": F.col("o_orderpriority"),
-            "region": F.col("o_orderstatus"),
-            "cost": F.col("o_totalprice"),
-            "currency": F.lit("USD"),
-        },
-        cloud_provider="gcp",
-        sync_timestamp=SYNC_TS,
-    )
+    return _fixture_costs(spark, sf_dir, "orders")
 
 
 def costs_view(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -162,24 +155,7 @@ def q_costs_normalize_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema itself (the actual DDL-parity claim) is asserted in
     tests/test_pipeline.py::test_normalize_decimal_money_ddl, where
     no pandas materialization is involved."""
-    from pyspark.sql import types as T
-
-    ev = table(spark, sf_dir, "events")
-    out = normalize_mapped(
-        ev,
-        source_table="events",
-        mapping={
-            "date": F.col("ts").cast("date"),
-            "account_id": F.col("user_id").cast("string"),
-            "service": F.col("event_type"),
-            "region": F.lit(None),
-            "cost": F.col("value"),
-            "currency": F.lit("USD"),
-        },
-        cloud_provider="aws",
-        sync_timestamp=SYNC_TS,
-        cost_type=T.DecimalType(10, 2),
-    )
+    out = _fixture_costs(spark, sf_dir, "events", T.DecimalType(10, 2))
     return out.withColumn("cost", F.col("cost").cast("string"))
 
 

@@ -11,7 +11,6 @@ shared normalize operator consumes.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 from typing import Callable, Protocol
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -36,20 +35,6 @@ class Source(Protocol):
         (reference src/main.py:39). None = source is not
         date-scopable and ``months`` leaves it unfiltered."""
         ...
-
-
-@dataclass
-class SourceRegistry:
-    sources: dict[str, Source]
-
-    def register(self, source: Source) -> None:
-        self.sources[source.name] = source
-
-    def get(self, name: str) -> Source:
-        return self.sources[name]
-
-    def names(self) -> list[str]:
-        return sorted(self.sources)
 
 
 def make_source(

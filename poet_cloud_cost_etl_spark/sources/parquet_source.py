@@ -18,9 +18,7 @@ Spark re-expression:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -52,21 +50,3 @@ def read_month_partitions(
         c = (F.col("year") == y) & (F.col("month") == m)
         cond = c if cond is None else (cond | c)
     return df.filter(cond) if cond is not None else df
-
-
-def file_count(df: DataFrame) -> int:
-    """S3: number of files feeding a scan (glob-count parity,
-    aws_cur.py:140-147)."""
-    return len(df.inputFiles())
-
-
-def is_empty(df: DataFrame) -> bool:
-    """S3/P9: empty-input guard (main.py:99-101)."""
-    return df.isEmpty()
-
-
-def bounded_egress(df: DataFrame) -> Iterator[Row]:
-    """S4 equivalent: stream rows to the driver one partition at a
-    time — bounded memory without the LIMIT/OFFSET rescan pathology
-    (aws_cur.py:201-219)."""
-    return df.toLocalIterator()

@@ -163,15 +163,38 @@ N_RUNS = 3
 # record exists to test. (The first cut used k=80 ≠ 64 leaves; the
 # tree then paid ~25% more pair work and the comparison was
 # apples-to-oranges.)
-def _semantic_dedup_scaled(spark, sf_dir, k_scale):
+def _pinned(fn, pair=None, flat_assign=False):
+    """Wrap probe ``fn`` so its plan is built with the similarity
+    engine policies pinned: ``pair`` = "expr" or "gemm" forces one
+    within-bucket pair engine (``GEMM_MIN_BUCKET``), ``flat_assign``
+    keeps the interpreted flat centroid assignment at any k
+    (``FLAT_ASSIGN_MAX_K``). Both constants are read while the plan
+    is built, so restoring them afterwards is safe."""
+
+    def wrapped(spark, sf_dir, k_scale):
+        from poet_cloud_cost_etl_spark.operators import similarity as S
+
+        saved = S.GEMM_MIN_BUCKET, S.FLAT_ASSIGN_MAX_K
+        if pair is not None:
+            S.GEMM_MIN_BUCKET = {"expr": 10**9, "gemm": 1}[pair]
+        if flat_assign:
+            S.FLAT_ASSIGN_MAX_K = 10**9
+        try:
+            return fn(spark, sf_dir, k_scale)
+        finally:
+            S.GEMM_MIN_BUCKET, S.FLAT_ASSIGN_MAX_K = saved
+
+    return wrapped
+
+
+def _semantic_dedup_k(spark, sf_dir, k_scale):
+    """X28 with the scaled-k deployment knob (k = 8 -> 64)."""
     from poet_cloud_cost_etl_spark.catalog import table
     from poet_cloud_cost_etl_spark.operators.similarity import semantic_dedup
 
     e = table(spark, sf_dir, "embeddings")
     k = 8 ** (2 if k_scale > 1 else 1)
-    return semantic_dedup(
-        e, "vec_id", "embedding", n_centroids=k, assign="flat"
-    )
+    return semantic_dedup(e, "vec_id", "embedding", n_centroids=k)
 
 
 def _semantic_dedup_tree(spark, sf_dir, k_scale):
@@ -230,78 +253,33 @@ def _bm25_scaled(spark, sf_dir, k_scale):
     return bm25_topk(d, "doc_id", "text", probes, k=10)
 
 
-# Round-9 (r8 verdict task 6): the equal-leaf-count r8 probe showed
-# flat and tree both ~21x at 10x data because WITHIN-LEAF pair work
-# (interpreted higher-order cosine per pair) dominated and buried the
-# assignment-strategy delta the record exists to demonstrate. The
-# gemm twins run the SAME probes with the BLAS within-leaf kernel
-# (_bucket_dups(pair_impl="gemm"), bit-identical results — pinned by
-# test_semantic_dedup_gemm_matches_expr), so pair cost stops masking
-# assignment cost: flat k=64 scores 64 centroids/row, the depth-2
-# tree scores 16 — the N·k vs N·b·log k claim, finally isolated.
-def _semantic_dedup_gemm(spark, sf_dir, k_scale):
-    from poet_cloud_cost_etl_spark.catalog import table
-    from poet_cloud_cost_etl_spark.operators.similarity import semantic_dedup
-
-    e = table(spark, sf_dir, "embeddings")
-    k = 8 ** (2 if k_scale > 1 else 1)
-    return semantic_dedup(
-        e, "vec_id", "embedding", n_centroids=k, assign="flat",
-        pair_impl="gemm",
-    )
-
-
-def _semantic_dedup_tree_gemm(spark, sf_dir, k_scale):
-    from poet_cloud_cost_etl_spark.catalog import table
-    from poet_cloud_cost_etl_spark.operators.similarity import (
-        semantic_dedup_tree,
-    )
-
-    depth = 2 if k_scale > 1 else 1
-    e = table(spark, sf_dir, "embeddings")
-    return semantic_dedup_tree(
-        e, "vec_id", "embedding", branching=8, depth=depth, threshold=0.35,
-        pair_impl="gemm",
-    )
-
-
 # The two round-9 bucketed-pair embedding ops pin k=8 in their
 # registered queries (oracle determinism); at 10x data that measures
 # 10x-bigger buckets (quadratic pair growth — a mis-deployment, same
 # reasoning as the semantic probes above). The scaled variants apply
 # the granularity knob: k = 8 -> 64 so bucket size stays constant.
-def _threshold_calibration_scaled(pair_impl, assign="flat"):
-    def fn(spark, sf_dir, k_scale):
-        from poet_cloud_cost_etl_spark.catalog import table
-        from poet_cloud_cost_etl_spark.operators.similarity import (
-            cosine_threshold_calibration,
-        )
+def _threshold_calibration_scaled(spark, sf_dir, k_scale):
+    from poet_cloud_cost_etl_spark.catalog import table
+    from poet_cloud_cost_etl_spark.operators.similarity import (
+        cosine_threshold_calibration,
+    )
 
-        e = table(spark, sf_dir, "embeddings")
-        k = 8 ** (2 if k_scale > 1 else 1)
-        return cosine_threshold_calibration(
-            e, "vec_id", "embedding", "label", n_centroids=k,
-            pair_impl=pair_impl, assign=assign,
-        )
-
-    return fn
+    e = table(spark, sf_dir, "embeddings")
+    k = 8 ** (2 if k_scale > 1 else 1)
+    return cosine_threshold_calibration(
+        e, "vec_id", "embedding", "label", n_centroids=k
+    )
 
 
-def _margin_mining_scaled(pair_impl, assign="flat"):
-    def fn(spark, sf_dir, k_scale):
-        from poet_cloud_cost_etl_spark.catalog import table
-        from poet_cloud_cost_etl_spark.operators.similarity import (
-            margin_knn_pairs,
-        )
+def _margin_mining_scaled(spark, sf_dir, k_scale):
+    from poet_cloud_cost_etl_spark.catalog import table
+    from poet_cloud_cost_etl_spark.operators.similarity import (
+        margin_knn_pairs,
+    )
 
-        e = table(spark, sf_dir, "embeddings")
-        k = 8 ** (2 if k_scale > 1 else 1)
-        return margin_knn_pairs(
-            e, "vec_id", "embedding", "label", n_centroids=k,
-            pair_impl=pair_impl, assign=assign,
-        )
-
-    return fn
+    e = table(spark, sf_dir, "embeddings")
+    k = 8 ** (2 if k_scale > 1 else 1)
+    return margin_knn_pairs(e, "vec_id", "embedding", "label", n_centroids=k)
 
 
 # Shared-stage isolation probe (SURVEY r10 follow-up, settled r9):
@@ -333,18 +311,6 @@ def _bbit_pair_core_only(spark, sf_dir, k_scale):
         F.explode("__sh").alias("shingle"),
     )
     return _pair_common(sh_n, "doc_id", None, None)
-
-
-def _semantic_dedup_auto(spark, sf_dir, k_scale):
-    """X28 at the r10 DEFAULTS (assign='auto', pair_impl='auto') with
-    the scaled-k deployment knob — the configuration a default caller
-    actually runs at scale."""
-    from poet_cloud_cost_etl_spark.catalog import table
-    from poet_cloud_cost_etl_spark.operators.similarity import semantic_dedup
-
-    e = table(spark, sf_dir, "embeddings")
-    k = 8 ** (2 if k_scale > 1 else 1)
-    return semantic_dedup(e, "vec_id", "embedding", n_centroids=k)
 
 
 def _hubness_ivf_scaled(spark, sf_dir, k_scale):
@@ -470,33 +436,41 @@ def _r10_registered(name):
 
 
 SCALED_K = [
-    ("semantic_dedup_scaled_k", _semantic_dedup_scaled),
+    ("semantic_dedup_scaled_k", _pinned(_semantic_dedup_k, flat_assign=True)),
     ("semantic_dedup_tree_scaled", _semantic_dedup_tree),
-    ("semantic_dedup_gemm_scaled_k", _semantic_dedup_gemm),
-    ("semantic_dedup_tree_gemm_scaled", _semantic_dedup_tree_gemm),
-    ("semantic_threshold_calibration_scaled", _threshold_calibration_scaled("expr")),
-    ("bitext_margin_mining_scaled", _margin_mining_scaled("expr")),
-    ("semantic_threshold_calibration_gemm", _threshold_calibration_scaled("gemm")),
-    ("bitext_margin_mining_gemm", _margin_mining_scaled("gemm")),
-    # gemm pair kernel + tree assignment: the full scale shape (the
-    # remaining ~19x of the flat gemm probes is flat assignment's
-    # N*k growth at k prop. to N — same term the X28 tree removes).
-    ("semantic_threshold_calibration_tree_gemm",
-     _threshold_calibration_scaled("gemm", "tree")),
-    ("bitext_margin_mining_tree_gemm", _margin_mining_scaled("gemm", "tree")),
-    # round-10 (r9 verdict task 6): the REGISTERED configuration —
-    # pair_impl="auto" (per-bucket expr/gemm split at GEMM_MIN_BUCKET)
-    # + assign="auto" — probed with the same scaled-k deployment knob,
-    # so BENCH_SF1 reflects what a default caller actually runs.
-    ("semantic_threshold_calibration_auto",
-     _threshold_calibration_scaled("auto", "auto")),
-    ("bitext_margin_mining_auto", _margin_mining_scaled("auto", "auto")),
+    # Round-9 (r8 verdict task 6): the equal-leaf-count r8 probe showed
+    # flat and tree both ~21x at 10x data because WITHIN-LEAF pair work
+    # (interpreted higher-order cosine per pair) dominated and buried the
+    # assignment-strategy delta the record exists to demonstrate. The
+    # gemm twins run the SAME probes with the BLAS within-leaf kernel
+    # pinned (bit-identical results — pinned by
+    # test_semantic_dedup_gemm_matches_expr), so pair cost stops masking
+    # assignment cost: flat k=64 scores 64 centroids/row, the depth-2
+    # tree scores 16 — the N·k vs N·b·log k claim, finally isolated.
+    ("semantic_dedup_gemm_scaled_k",
+     _pinned(_semantic_dedup_k, pair="gemm", flat_assign=True)),
+    ("semantic_dedup_tree_gemm_scaled", _pinned(_semantic_dedup_tree, pair="gemm")),
+    ("semantic_threshold_calibration_scaled",
+     _pinned(_threshold_calibration_scaled, pair="expr", flat_assign=True)),
+    ("bitext_margin_mining_scaled",
+     _pinned(_margin_mining_scaled, pair="expr", flat_assign=True)),
+    ("semantic_threshold_calibration_gemm",
+     _pinned(_threshold_calibration_scaled, pair="gemm", flat_assign=True)),
+    ("bitext_margin_mining_gemm",
+     _pinned(_margin_mining_scaled, pair="gemm", flat_assign=True)),
+    # the REGISTERED configuration — the engine policies left to
+    # decide (per-bucket expr/gemm split at GEMM_MIN_BUCKET, gemm
+    # assignment above FLAT_ASSIGN_MAX_K) — probed with the same
+    # scaled-k deployment knob, so BENCH_SF1 reflects what a default
+    # caller actually runs.
+    ("semantic_threshold_calibration_auto", _threshold_calibration_scaled),
+    ("bitext_margin_mining_auto", _margin_mining_scaled),
     # round-10: decade points for the r11-queue operators BEFORE they
     # register (tests/test_r11_queue.py) — the c{i} copy prefixes keep
     # cross-copy terms/shingles/lines disjoint, so candidate
     # generation scales linearly and each probe measures the op, not
     # copy-clique fiction. Wrappers take (spark, sf_dir).
-    ("semantic_dedup_auto_scaled", _semantic_dedup_auto),
+    ("semantic_dedup_auto_scaled", _semantic_dedup_k),
     ("tfidf_cosine_pairs_r11", _r11("_r11q_tfidf_cosine_pairs")),
     ("bag_jaccard_pairs_r11", _r11("_r11q_bag_jaccard_pairs")),
     ("cdc_chunk_stats_r11", _r11("_r11q_cdc_chunk_stats")),
@@ -554,7 +528,8 @@ SCALED_K = [
     ("source_overlap_hll_r14", _r11("_r14q_source_overlap_hll")),
     ("mutual_knn_ivf_scaled", _mutual_knn_ivf_scaled),
     # round 12 (VERDICT r11 task 3): the shipping default is now
-    # k ∝ N (n_centroids=None -> max(8, ceil(N/64)), assign="auto"),
+    # k ∝ N (n_centroids=None -> max(8, ceil(N/64)), engine policies
+    # deciding assignment),
     # so the _r14 registered-config probe above measures the
     # scale-safe shape. The _scaled entry keeps the explicit
     # fixed-k=64 point for comparison; the historical k=8 quadratic

@@ -95,12 +95,11 @@ def test_no_python_udf_in_any_query(spark):
 def test_no_driver_collect_in_any_query(spark):
     """Twin of the no-Python-UDF guard: CONSTRUCTING any registered
     query must be fully lazy — no .collect()/.toPandas()/.toLocalIterator
-    on the driver while the plan is declared. This pins the opt-in
-    ``cosine_topk(impl='blas')`` path (similarity.py — the documented
-    driver-OOM hazard that collect()s one side of the GEMM)
+    on the driver while the plan is declared. This pins driver-OOM
+    hazards such as a GEMM that collect()s one side to the driver
     unreachable from every registered query, forever: a future query
-    that routed through it, or any operator that materialized data to
-    build its plan, fails here before it can ship."""
+    that routed through one, or any operator that materialized data
+    to build its plan, fails here before it can ship."""
     from unittest import mock
 
     from pyspark.sql import DataFrame
@@ -347,70 +346,59 @@ def test_mixture_sample_single_corpus_shuffle(spark):
 
 def test_semantic_dedup_auto_switch_plan(spark):
     """X28 scale default: above FLAT_ASSIGN_MAX_K centroids the
-    default (assign='auto') call must use the BLAS gemm assignment
-    (round 12 — flat SEMANTICS, vectorized engine; the tree is the
-    explicit >10⁵-centroid dial). Gemm signature: the kernel's
+    assignment must use the BLAS gemm kernel (round 12 — flat
+    SEMANTICS, vectorized engine). Gemm signature: the kernel's
     FlatMapGroupsInPandas over the checkpointed centroid draw
     (ExistingRDD — the TakeOrderedAndProject draw runs inside the
-    checkpoint job, not the final plan). Tree signature (explicit
-    assign='tree'): per-level checkpointed ExistingRDD centroid
-    tables + the bucket-descent BroadcastHashJoin, no Python stage.
-    Below the threshold the flat path keeps its global
-    orderBy+limit draw (TakeOrderedAndProject) and pure-JVM
-    scoring."""
+    checkpoint job, not the final plan). Tree signature
+    (``ivf_tree_assign``, the bucketing of ``semantic_dedup_tree``):
+    per-level checkpointed ExistingRDD centroid tables + the
+    bucket-descent BroadcastHashJoin, no Python stage. Below the
+    threshold the flat path keeps its global orderBy+limit draw
+    (TakeOrderedAndProject) and pure-JVM scoring. The assignment is
+    planned through ``_centroid_buckets`` directly: in the operator
+    the pair stage's checkpointed size split (see _sized_buckets)
+    hides everything upstream behind an ExistingRDD."""
+    import math
+
     from poet_cloud_cost_etl_spark.operators.similarity import (
         FLAT_ASSIGN_MAX_K,
+        _centroid_buckets,
+        ivf_tree_assign,
         semantic_dedup,
     )
 
     e = table(spark, SF_SMALL, "embeddings")
-    # pair_impl='expr' so the ASSIGNMENT plan stays inspectable: the
-    # default 'auto' pair engine eagerly checkpoints the sized bucket
-    # table (see _sized_buckets), which hides everything upstream of
-    # the pair stage behind an ExistingRDD in the final plan. The
-    # assignment engine choice under test is independent of the pair
-    # engine.
-    big = semantic_dedup(
-        e, "vec_id", "embedding", n_centroids=FLAT_ASSIGN_MAX_K + 1,
-        pair_impl="expr",
-    )
+    big = _centroid_buckets(e, "vec_id", "embedding", FLAT_ASSIGN_MAX_K + 1)
     plan = X.physical_plan(big)
     # gemm kernel stage + checkpointed centroid draw, no flat draw
     assert "FlatMapGroupsInPandas" in plan, plan
     assert "ExistingRDD" in plan, plan
     assert "TakeOrderedAndProject" not in plan, plan
-    assert big.columns == ["vec_id", "centroid_id", "is_dup"]
+    assert semantic_dedup(
+        e, "vec_id", "embedding", n_centroids=FLAT_ASSIGN_MAX_K + 1
+    ).columns == ["vec_id", "centroid_id", "is_dup"]
 
-    tree = semantic_dedup(
-        e, "vec_id", "embedding", n_centroids=FLAT_ASSIGN_MAX_K + 1,
-        assign="tree", pair_impl="expr",
+    tree = ivf_tree_assign(
+        e, "vec_id", "embedding",
+        branching=math.ceil(math.sqrt(FLAT_ASSIGN_MAX_K + 1)), depth=2,
     )
     tree_plan = X.physical_plan(tree)
     assert tree_plan.count("ExistingRDD") >= 2, tree_plan
     assert tree_plan.count("BroadcastHashJoin") >= 1, tree_plan
     assert "FlatMapGroupsInPandas" not in tree_plan, tree_plan
 
-    small = semantic_dedup(
-        e, "vec_id", "embedding", n_centroids=8, pair_impl="expr"
-    )
+    small = _centroid_buckets(e, "vec_id", "embedding", 8)
     small_plan = X.physical_plan(small)
     assert small_plan.count("Window") == 0, small_plan
     assert "TakeOrderedAndProject" in small_plan, small_plan
-    # the default-config (auto) plan: the checkpointed size split is
-    # visible as the union of the two pair engines over ExistingRDD
+    # the operator plan: the checkpointed size split is visible as
+    # the union of the two pair engines over ExistingRDD
     auto_plan = X.physical_plan(
         semantic_dedup(e, "vec_id", "embedding", n_centroids=8)
     )
     assert "ExistingRDD" in auto_plan, auto_plan
     assert "Union" in auto_plan, auto_plan
-
-    # refine_iters is legal on flat AND gemm (the draw is the same
-    # Lloyd-refinable table); only the per-node tree draw rejects it
-    with pytest.raises(ValueError, match="refine_iters"):
-        semantic_dedup(
-            e, "vec_id", "embedding", assign="tree",
-            n_centroids=FLAT_ASSIGN_MAX_K + 1, refine_iters=1,
-        )
 
 
 def test_round8_queries_plan_shapes(spark):
@@ -773,36 +761,48 @@ def test_round9_queries_plan_shapes(spark):
 
 
 def test_round9_gemm_kernel_plan(spark):
-    """pair_impl='gemm' must plan the within-bucket stage as ONE
+    """The gemm pair engine must plan the within-bucket stage as ONE
     FlatMapGroupsInPandas (Arrow-sanctioned kernel) keyed on the
-    bucket — no bucket-keyed self-join remains."""
-    from poet_cloud_cost_etl_spark.operators.similarity import semantic_dedup
+    bucket — no bucket-keyed self-join in that arm — while the expr
+    engine stays kernel-free. semantic_dedup at k=8 assigns on the
+    JVM, so its one Python stage is the pair kernel."""
+    from poet_cloud_cost_etl_spark.operators.similarity import (
+        _bucket_pair_scores_expr,
+        _bucket_pair_scores_gemm,
+        _centroid_buckets,
+        semantic_dedup,
+    )
 
     emb = table(spark, SF_SMALL, "embeddings")
+    d = X.physical_plan(semantic_dedup(emb, "vec_id", "embedding"))
+    assert d.count("FlatMapGroupsInPandas") == 1, d
+    buckets = _centroid_buckets(emb, "vec_id", "embedding", 8)
     g = X.physical_plan(
-        semantic_dedup(emb, "vec_id", "embedding", pair_impl="gemm")
+        _bucket_pair_scores_gemm(buckets, "centroid_id", "vec_id", "embedding")
     )
     assert "FlatMapGroupsInPandas" in g, g
+    assert "SortMergeJoin" not in g and "BroadcastHashJoin" not in g, g
     e = X.physical_plan(
-        semantic_dedup(emb, "vec_id", "embedding", pair_impl="expr")
+        _bucket_pair_scores_expr(buckets, "centroid_id", "vec_id", "embedding")
     )
     assert "FlatMapGroupsInPandas" not in e, e
 
 
 def test_round9_pair_scores_gemm_plan(spark):
-    """The X129/X137 gemm pair stage must also plan as ONE
+    """The X129/X137 pair stage must also plan the gemm arm as ONE
     FlatMapGroupsInPandas keyed on the centroid bucket, with the
-    expr path staying kernel-free (the correctness-pinned shape)."""
+    expr engine staying kernel-free (the correctness-pinned shape)
+    in both self mode with a payload and cross mode."""
     from poet_cloud_cost_etl_spark.operators.similarity import (
+        _bucket_pair_scores_expr,
+        _centroid_buckets,
         cosine_threshold_calibration,
         margin_knn_pairs,
     )
 
     emb = table(spark, SF_SMALL, "embeddings")
     g = X.physical_plan(
-        cosine_threshold_calibration(
-            emb, "vec_id", "embedding", "label", pair_impl="gemm"
-        )
+        cosine_threshold_calibration(emb, "vec_id", "embedding", "label")
     )
     assert g.count("FlatMapGroupsInPandas") == 1, g
     # margin's pair table is eagerly localCheckpoint-ed (reused by
@@ -810,11 +810,16 @@ def test_round9_pair_scores_gemm_plan(spark):
     # by plan time and the final plan reads the checkpoint RDD —
     # assert that shape instead of the (invisible) kernel node.
     mg = X.physical_plan(
-        margin_knn_pairs(emb, "vec_id", "embedding", "label", pair_impl="gemm")
+        margin_knn_pairs(emb, "vec_id", "embedding", "label")
     )
     assert "ExistingRDD" in mg, mg
-    for fn in (cosine_threshold_calibration, margin_knn_pairs):
+    buckets = _centroid_buckets(emb, "vec_id", "embedding", 8).join(
+        emb.select("vec_id", "label"), "vec_id"
+    ).withColumn("__g", F.col("label") % 2)
+    for kw in (dict(payload_cols=("label",)), dict(cross_col="__g")):
         e2 = X.physical_plan(
-            fn(emb, "vec_id", "embedding", "label", pair_impl="expr")
+            _bucket_pair_scores_expr(
+                buckets, "centroid_id", "vec_id", "embedding", **kw
+            )
         )
         assert "FlatMapGroupsInPandas" not in e2, e2

@@ -1,6 +1,6 @@
 """Round-10 consolidation tests: the HALF_UP rounding twin that makes
 the BLAS pair kernels decimal-identical to Spark's ``F.round`` (r9
-ADVICE item 1), and the ``pair_impl="auto"`` per-bucket engine split
+ADVICE item 1), and the ``_pair_scores`` per-bucket engine split
 that makes the scale-proven gemm path the default (VERDICT r9 task 2).
 """
 
@@ -85,83 +85,49 @@ def test_round6_half_up_domain_guard():
 
 
 def test_pair_impl_auto_splits_and_matches(spark, monkeypatch):
-    """``pair_impl='auto'`` must (a) route small buckets to the expr
-    engine and large ones to the BLAS kernel — both branches visible
-    in the plan when the fixture straddles the threshold — and (b)
-    return exactly the expr path's rows for every operator in the
-    family. GEMM_MIN_BUCKET is pinned mid-fixture (~500 rows over 8
-    centroids ≈ 60/bucket) so BOTH arms do real work."""
+    """The ``_pair_scores`` size split must (a) route small buckets to
+    the expr engine and large ones to the BLAS kernel — both branches
+    visible in the plan when the fixture straddles the threshold —
+    and (b) return exactly the all-expr rows (GEMM_MIN_BUCKET patched
+    past every bucket) for every operator in the family.
+    GEMM_MIN_BUCKET is pinned mid-fixture (~500 rows over 8 centroids
+    ≈ 60/bucket) so BOTH arms do real work."""
     from poet_cloud_cost_etl_spark.catalog import table as _t
     from poet_cloud_cost_etl_spark.operators import similarity as S
 
-    monkeypatch.setattr(S, "GEMM_MIN_BUCKET", 60)
     emb = _t(spark, SF_SMALL, "embeddings")
 
-    auto_df = S.semantic_dedup(
-        emb, "vec_id", "embedding", threshold=0.35, pair_impl="auto"
-    )
-    plan = auto_df._jdf.queryExecution().executedPlan().toString()
+    def run():
+        return (
+            {
+                (r.vec_id, r.centroid_id, r.is_dup)
+                for r in S.semantic_dedup(
+                    emb, "vec_id", "embedding", threshold=0.35
+                ).collect()
+            },
+            [
+                tuple(r)
+                for r in S.cosine_threshold_calibration(
+                    emb, "vec_id", "embedding", "label"
+                ).collect()
+            ],
+            [
+                tuple(r)
+                for r in S.margin_knn_pairs(
+                    emb, "vec_id", "embedding", "label"
+                ).collect()
+            ],
+        )
+
+    monkeypatch.setattr(S, "GEMM_MIN_BUCKET", 60)
+    split_df = S.semantic_dedup(emb, "vec_id", "embedding", threshold=0.35)
+    plan = split_df._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" in plan, plan  # gemm arm present
     assert "Union" in plan, plan  # expr arm unioned in
-    auto = {(r.vec_id, r.centroid_id, r.is_dup) for r in auto_df.collect()}
-    expr = {
-        (r.vec_id, r.centroid_id, r.is_dup)
-        for r in S.semantic_dedup(
-            emb, "vec_id", "embedding", threshold=0.35, pair_impl="expr"
-        ).collect()
-    }
-    assert auto == expr
-
-    cal_auto = S.cosine_threshold_calibration(
-        emb, "vec_id", "embedding", "label", pair_impl="auto"
-    ).collect()
-    cal_expr = S.cosine_threshold_calibration(
-        emb, "vec_id", "embedding", "label", pair_impl="expr"
-    ).collect()
-    assert [tuple(r) for r in cal_auto] == [tuple(r) for r in cal_expr]
-
-    m_auto = S.margin_knn_pairs(
-        emb, "vec_id", "embedding", "label", pair_impl="auto"
-    ).collect()
-    m_expr = S.margin_knn_pairs(
-        emb, "vec_id", "embedding", "label", pair_impl="expr"
-    ).collect()
-    assert [tuple(r) for r in m_auto] == [tuple(r) for r in m_expr]
-
-
-def test_pair_impl_auto_is_default_and_validated(spark):
-    """The r10 default flip: every operator in the centroid-bucketed
-    pair family defaults to ``pair_impl='auto'``; an unknown impl is
-    rejected with the full menu."""
-    import inspect
-
-    from poet_cloud_cost_etl_spark.operators import similarity as S
-
-    for fn in (
-        S.semantic_dedup,
-        S.semantic_dedup_tree,
-        S.cosine_threshold_calibration,
-        S.margin_knn_pairs,
-    ):
-        assert (
-            inspect.signature(fn).parameters["pair_impl"].default == "auto"
-        ), fn.__name__
-
-    emb = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.0, 1.0])], ["vec_id", "embedding"]
-    )
-    with pytest.raises(ValueError, match="auto|expr|gemm"):
-        S.semantic_dedup(
-            emb, "vec_id", "embedding", pair_impl="blas"
-        ).collect()
-    with pytest.raises(ValueError, match="auto|expr|gemm"):
-        S._pair_scores(
-            emb.withColumn("b", F.lit(1)),
-            "b",
-            "vec_id",
-            "embedding",
-            pair_impl="nope",
-        )
+    split = run()
+    monkeypatch.setattr(S, "GEMM_MIN_BUCKET", 10**9)
+    expr = run()
+    assert split == expr
 
 
 def test_freshness_decay_sign_symmetric_division(spark):

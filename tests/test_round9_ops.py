@@ -460,7 +460,20 @@ def test_margin_mining_hub_suppression(spark):
     assert margins[0] > 1_000_000
 
 
-def test_semantic_dedup_gemm_matches_expr(spark):
+def _all_expr_vs_all_gemm(monkeypatch, run):
+    """``run()`` under each single pair engine: GEMM_MIN_BUCKET past
+    every bucket forces the expr self-join, 1 forces the BLAS kernel
+    (the ``_pair_scores`` size split is the only engine choice)."""
+    from poet_cloud_cost_etl_spark.operators import similarity as S
+
+    monkeypatch.setattr(S, "GEMM_MIN_BUCKET", 10**9)
+    expr = run()
+    monkeypatch.setattr(S, "GEMM_MIN_BUCKET", 1)
+    gemm = run()
+    return expr, gemm
+
+
+def test_semantic_dedup_gemm_matches_expr(spark, monkeypatch):
     """The GEMM within-bucket kernel (r8 verdict task 6) must agree
     bit-for-bit with the interpreted expr path on the fixture
     embeddings — flat and tree, dup flags AND bucket ids."""
@@ -473,35 +486,29 @@ def test_semantic_dedup_gemm_matches_expr(spark):
 
     emb = _t(spark, SF_SMALL, "embeddings")
     for thr in (0.35, 0.95):
-        flat_e = {
-            (r.vec_id, r.centroid_id, r.is_dup)
-            for r in semantic_dedup(
-                emb, "vec_id", "embedding", threshold=thr, pair_impl="expr"
-            ).collect()
-        }
-        flat_g = {
-            (r.vec_id, r.centroid_id, r.is_dup)
-            for r in semantic_dedup(
-                emb, "vec_id", "embedding", threshold=thr, pair_impl="gemm"
-            ).collect()
-        }
+        flat_e, flat_g = _all_expr_vs_all_gemm(
+            monkeypatch,
+            lambda: {
+                (r.vec_id, r.centroid_id, r.is_dup)
+                for r in semantic_dedup(
+                    emb, "vec_id", "embedding", threshold=thr
+                ).collect()
+            },
+        )
         assert flat_e == flat_g, f"flat mismatch at thr={thr}"
-    tree_e = {
-        (r.vec_id, r.leaf_id, r.is_dup)
-        for r in semantic_dedup_tree(
-            emb, "vec_id", "embedding", threshold=0.35, pair_impl="expr"
-        ).collect()
-    }
-    tree_g = {
-        (r.vec_id, r.leaf_id, r.is_dup)
-        for r in semantic_dedup_tree(
-            emb, "vec_id", "embedding", threshold=0.35, pair_impl="gemm"
-        ).collect()
-    }
+    tree_e, tree_g = _all_expr_vs_all_gemm(
+        monkeypatch,
+        lambda: {
+            (r.vec_id, r.leaf_id, r.is_dup)
+            for r in semantic_dedup_tree(
+                emb, "vec_id", "embedding", threshold=0.35
+            ).collect()
+        },
+    )
     assert tree_e == tree_g
 
 
-def test_pair_scores_gemm_matches_expr(spark):
+def test_pair_scores_gemm_matches_expr(spark, monkeypatch):
     """The shared BLAS pair-scoring kernel (X129/X137 gemm path)
     must agree bit-for-bit with the interpreted expr pair stage —
     threshold-calibration table AND margin-ranked pair list,
@@ -509,69 +516,53 @@ def test_pair_scores_gemm_matches_expr(spark):
     from tests.conftest import SF_SMALL
     from poet_cloud_cost_etl_spark.catalog import table as _t
     from poet_cloud_cost_etl_spark.operators.similarity import (
+        _bucket_pair_scores_expr,
+        _bucket_pair_scores_gemm,
         cosine_threshold_calibration,
+        ivf_tree_assign,
         margin_knn_pairs,
     )
 
     emb = _t(spark, SF_SMALL, "embeddings")
-    cal_e = [
-        tuple(r)
-        for r in cosine_threshold_calibration(
-            emb, "vec_id", "embedding", "label", pair_impl="expr"
-        ).collect()
-    ]
-    cal_g = [
-        tuple(r)
-        for r in cosine_threshold_calibration(
-            emb, "vec_id", "embedding", "label", pair_impl="gemm"
-        ).collect()
-    ]
+    cal_e, cal_g = _all_expr_vs_all_gemm(
+        monkeypatch,
+        lambda: [
+            tuple(r)
+            for r in cosine_threshold_calibration(
+                emb, "vec_id", "embedding", "label"
+            ).collect()
+        ],
+    )
     assert cal_e == cal_g
-    mar_e = [
-        tuple(r)
-        for r in margin_knn_pairs(
-            emb, "vec_id", "embedding", "label", pair_impl="expr"
-        ).collect()
-    ]
-    mar_g = [
-        tuple(r)
-        for r in margin_knn_pairs(
-            emb, "vec_id", "embedding", "label", pair_impl="gemm"
-        ).collect()
-    ]
+    mar_e, mar_g = _all_expr_vs_all_gemm(
+        monkeypatch,
+        lambda: [
+            tuple(r)
+            for r in margin_knn_pairs(
+                emb, "vec_id", "embedding", "label"
+            ).collect()
+        ],
+    )
     assert mar_e == mar_g
-    # tree assignment (the scale path for k > FLAT_ASSIGN_MAX_K):
-    # expr and gemm must also agree under the tree's bucketing
-    cal_te = sorted(
-        tuple(r)
-        for r in cosine_threshold_calibration(
-            emb, "vec_id", "embedding", "label",
-            n_centroids=16, assign="tree", pair_impl="expr",
-        ).collect()
+    # tree buckets (the scale bucketing, 16 leaves): the two kernels
+    # must also agree on the tree's partition, in the calibration's
+    # self mode with a payload and in the margin's cross mode
+    leaves = ivf_tree_assign(
+        emb, "vec_id", "embedding", branching=4, depth=2
+    ).join(emb.select("vec_id", "label"), "vec_id").withColumn(
+        "__g", F.col("label") % 2
     )
-    cal_tg = sorted(
-        tuple(r)
-        for r in cosine_threshold_calibration(
-            emb, "vec_id", "embedding", "label",
-            n_centroids=16, assign="tree", pair_impl="gemm",
-        ).collect()
-    )
-    assert cal_te == cal_tg
-    mar_te = [
-        tuple(r)
-        for r in margin_knn_pairs(
-            emb, "vec_id", "embedding", "label",
-            n_centroids=16, assign="tree", pair_impl="expr",
-        ).collect()
-    ]
-    mar_tg = [
-        tuple(r)
-        for r in margin_knn_pairs(
-            emb, "vec_id", "embedding", "label",
-            n_centroids=16, assign="tree", pair_impl="gemm",
-        ).collect()
-    ]
-    assert mar_te == mar_tg
+    for kw in (dict(payload_cols=("label",)), dict(cross_col="__g")):
+        e_rows, g_rows = (
+            sorted(
+                tuple(r)
+                for r in kern(
+                    leaves, "leaf_id", "vec_id", "embedding", **kw
+                ).collect()
+            )
+            for kern in (_bucket_pair_scores_expr, _bucket_pair_scores_gemm)
+        )
+        assert e_rows == g_rows and len(e_rows) > 0, kw
 
 
 def test_bucket_pair_scores_gemm_edges(spark):
@@ -675,7 +666,7 @@ def test_pair_scores_gemm_adversarial_parity(spark):
             v = np.round(v, 1)
         rows.append((i, [float(x) for x in v]))
     df = spark.createDataFrame(rows, ["vec_id", "embedding"]).repartition(8)
-    assigned = _centroid_buckets(df, "vec_id", "embedding", 8, "flat").select(
+    assigned = _centroid_buckets(df, "vec_id", "embedding", 8).select(
         F.col("vec_id").alias("__id"),
         F.col("embedding").alias("__v"),
         "centroid_id",
@@ -708,7 +699,7 @@ def test_pair_scores_gemm_adversarial_parity(spark):
     assert g == e and len(e) > 10_000
 
 
-def test_semantic_dedup_gemm_zero_vector_threshold_parity(spark):
+def test_semantic_dedup_gemm_zero_vector_threshold_parity(spark, monkeypatch):
     """A zero-norm vector has NULL cosine to every mate; the expr
     path's NULL comparison never marks it a duplicate at ANY
     threshold — the gemm kernel must agree (the earlier
@@ -725,19 +716,14 @@ def test_semantic_dedup_gemm_zero_vector_threshold_parity(spark):
     ]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
     for thr in (-1.0, 0.0, 0.95):
-        e = {
-            r.vec_id: r.is_dup
-            for r in semantic_dedup(
-                df, "vec_id", "embedding", n_centroids=1,
-                threshold=thr, pair_impl="expr",
-            ).collect()
-        }
-        g = {
-            r.vec_id: r.is_dup
-            for r in semantic_dedup(
-                df, "vec_id", "embedding", n_centroids=1,
-                threshold=thr, pair_impl="gemm",
-            ).collect()
-        }
+        e, g = _all_expr_vs_all_gemm(
+            monkeypatch,
+            lambda: {
+                r.vec_id: r.is_dup
+                for r in semantic_dedup(
+                    df, "vec_id", "embedding", n_centroids=1, threshold=thr
+                ).collect()
+            },
+        )
         assert e == g, (thr, e, g)
         assert e[1] is False and e[4] is False, (thr, e)

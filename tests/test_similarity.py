@@ -1,18 +1,21 @@
-"""X3 cosine near-dup: the three kernels (expr cross-join, broadcast
-BLAS, block-pair GEMM) must agree bit-for-bit, and the default scale
-path must never materialize the corpus on the driver.
+"""X3 cosine near-dup: the block-pair GEMM operator must agree
+bit-for-bit with the interpreted expr pair stage, and the scale path
+must never materialize the corpus on the driver.
 
 Reference parity: the reference documents driver OOM on whole-corpus
-materialization as its failure mode; the block-pair impl is the
+materialization as its failure mode; the block-pair form is the
 distributed answer (shuffle on block ids, GEMM per block pair).
 """
 
 from __future__ import annotations
 
-import pytest
+import inspect
+
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from poet_cloud_cost_etl_spark.catalog import table
+from poet_cloud_cost_etl_spark.operators import similarity as S
 from poet_cloud_cost_etl_spark.operators.similarity import cosine_near_dup_pairs
 
 from tests.conftest import SF_MEDIUM
@@ -22,15 +25,21 @@ def _pairs(df: DataFrame) -> set[tuple]:
     return {(r.id_a, r.id_b, r.cos_sim) for r in df.collect()}
 
 
+def _expr_pairs(df: DataFrame, threshold: float) -> set[tuple]:
+    """All-pairs reference through the interpreted expr pair stage
+    (one bucket holding every row)."""
+    scored = S._bucket_pair_scores_expr(
+        df.withColumn("__b", F.lit(0)), "__b", "vec_id", "embedding",
+        min_cos=threshold,
+    )
+    return {(r.id_a, r.id_b, r.cos_e6 / 1_000_000) for r in scored.collect()}
+
+
 def test_block_pair_matches_blas_and_expr(spark):
     e = table(spark, SF_MEDIUM, "embeddings")
-    got = {
-        impl: _pairs(cosine_near_dup_pairs(e, "vec_id", "embedding", 0.4, impl=impl))
-        for impl in ("expr", "blas", "block")
-    }
-    assert got["expr"], "fixture should contain near-dup pairs"
-    assert got["block"] == got["expr"]
-    assert got["block"] == got["blas"]
+    want = _expr_pairs(e, 0.4)
+    assert want, "fixture should contain near-dup pairs"
+    assert _pairs(cosine_near_dup_pairs(e, "vec_id", "embedding", 0.4)) == want
 
 
 def test_block_pair_covers_all_block_counts(spark):
@@ -38,21 +47,37 @@ def test_block_pair_covers_all_block_counts(spark):
     group, whatever n_blocks is (1 = single group, 13 > distinct ids'
     spread, prime so hash blocks are uneven)."""
     e = table(spark, SF_MEDIUM, "embeddings")
-    want = _pairs(cosine_near_dup_pairs(e, "vec_id", "embedding", 0.4, impl="expr"))
+    want = _expr_pairs(e, 0.4)
     for n in (1, 3, 13):
         assert (
             _pairs(
-                cosine_near_dup_pairs(
-                    e, "vec_id", "embedding", 0.4, impl="block", n_blocks=n
-                )
+                cosine_near_dup_pairs(e, "vec_id", "embedding", 0.4, n_blocks=n)
             )
             == want
         ), n
 
 
+def test_near_dup_pairs_round_half_up(spark):
+    """(1,0,0,0,0)·(1,127,15,5,2) = 1 and the norms are 1 and 128, so
+    the cosine is exactly 1/128 = 0.0078125: a 6-decimal tie. Spark's
+    ``round``, DuckDB's ``round`` and the expr path give 0.007813
+    (HALF_UP); numpy's half-to-even ``np.round`` on pre-normalized
+    rows gave 0.007812."""
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0, 0.0, 0.0]), (2, [1.0, 127.0, 15.0, 5.0, 2.0])],
+        ["vec_id", "embedding"],
+    )
+    for n in (1, 2):
+        got = _pairs(
+            cosine_near_dup_pairs(df, "vec_id", "embedding", 0.0, n_blocks=n)
+        )
+        assert got == {(1, 2, 0.007813)}, (n, got)
+    assert _expr_pairs(df, 0.0) == {(1, 2, 0.007813)}
+
+
 def test_default_impl_never_collects_to_driver(spark, monkeypatch):
-    """The registered dedup_embedding_cosine query runs the default
-    impl; it must not pull the corpus through DataFrame.collect (the
+    """The registered dedup_embedding_cosine query runs this operator;
+    it must not pull the corpus through DataFrame.collect (the
     reference's documented OOM). We poison collect() and execute the
     full operator — only the test's own final count touches the
     driver, via count(), not collect()."""
@@ -66,12 +91,19 @@ def test_default_impl_never_collects_to_driver(spark, monkeypatch):
     assert out.count() > 0
 
 
-def test_blas_impl_is_opt_in_only(spark):
-    """impl='blas' still works (opt-in) but is not the default."""
-    import inspect
-
-    sig = inspect.signature(cosine_near_dup_pairs)
-    assert sig.parameters["impl"].default == "block"
+def test_no_public_engine_selectors():
+    """The engine choice is internal (``_centroid_assigner`` by
+    centroid count, ``_pair_scores`` by bucket size): no public
+    function in similarity.py takes a ``pair_impl``, ``assign`` or
+    ``impl`` selector."""
+    offenders = [
+        f"{name}({p})"
+        for name, fn in inspect.getmembers(S, inspect.isfunction)
+        if fn.__module__ == S.__name__ and not name.startswith("_")
+        for p in inspect.signature(fn).parameters
+        if p in ("pair_impl", "assign", "impl")
+    ]
+    assert not offenders, offenders
 
 
 def test_gemm_assign_matches_expr_ivf_assign(spark):
@@ -198,8 +230,8 @@ def test_gemm_assign_string_ids(spark):
 
 def test_zero_norm_vectors_emit_no_pairs_all_impls(spark):
     """r13 zero-norm convention (VERDICT r12 #3): a zero vector's
-    cosine is NaN (numpy kernels) / NULL (expr) — it fails every
-    >= threshold comparison, so ALL impls drop its pairs and agree
+    cosine is NaN (numpy kernel) / NULL (expr) — it fails every
+    >= threshold comparison, so both engines drop its pairs and agree
     on the remaining ones."""
     rows = [
         (1, [1.0, 0.0, 0.0]),
@@ -208,17 +240,13 @@ def test_zero_norm_vectors_emit_no_pairs_all_impls(spark):
         (4, [0.9, 0.1, 0.0]),
     ]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    got = {
-        impl: _pairs(
-            cosine_near_dup_pairs(
-                df, "vec_id", "embedding", 0.5, impl=impl, n_blocks=2
-            )
-        )
-        for impl in ("expr", "blas", "block")
-    }
-    assert got["expr"] == got["blas"] == got["block"]
-    assert got["expr"], "non-zero rows should still pair"
-    assert all(3 not in (a, b) for a, b, _ in got["expr"])
+    block = _pairs(
+        cosine_near_dup_pairs(df, "vec_id", "embedding", 0.5, n_blocks=2)
+    )
+    expr = _expr_pairs(df, 0.5)
+    assert block == expr
+    assert expr, "non-zero rows should still pair"
+    assert all(3 not in (a, b) for a, b, _ in expr)
 
 
 def test_knn_edges_bruteforce_rides_gemm_bit_identical(spark):
