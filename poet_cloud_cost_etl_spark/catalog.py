@@ -132,6 +132,8 @@ _SIZE_SUFFIXES = {
     "gb": 1024**3,
     "t": 1024**4,
     "tb": 1024**4,
+    "p": 1024**5,
+    "pb": 1024**5,
 }
 
 
@@ -142,7 +144,7 @@ def _parse_spark_bytes(value: str) -> int:
     to 128 MB on any k/m/g-suffixed value, skewing the split estimate
     ``spread_small_scan`` bases its spread/no-op decision on."""
     s = str(value).strip().lower()
-    num = s.rstrip("kmgtb")
+    num = s.rstrip("kmgtpb")
     mult = _SIZE_SUFFIXES.get(s[len(num):], 1) if len(num) < len(s) else 1
     return int(num) * mult
 

@@ -7,11 +7,12 @@ higher-order array functions, hashing with md5. Hash values are
 therefore engine-portable — DuckDB's md5 produces the same hex — so
 even MinHash/LSH is verifiable against a SQL oracle.
 
-Scale notes (100 TB): every step is a narrow map except the final
-candidate-pair self-join, which shuffles on (band_idx, band_value) —
-the standard LSH partitioning; band buckets are small by construction
-so the join never explodes. Stop-shingle removal (drop shingles with
-document frequency above a cap) bounds worst-case bucket sizes.
+Scale notes (100 TB): every blocked candidate generator (LSH bands,
+shingles, SimHash blocks, prefix shingles, weighted terms) shares one
+pair kernel, ``_bucket_pairs``: one shuffle on the bucket key, in-bucket
+pair explosion, and an AQE-splittable self-join for buckets above
+``HOT_BUCKET_SIZE``. Stop-shingle removal (drop shingles with document
+frequency above a cap) bounds worst-case bucket sizes.
 """
 
 from __future__ import annotations
@@ -110,82 +111,131 @@ def lsh_band_membership(
     )
 
 
+# Buckets larger than this take _bucket_pairs' self-join branch; read
+# at call time, so tests force that branch by patching the module.
+HOT_BUCKET_SIZE = 1024
+
+
+def _bucket_pairs(
+    rows: DataFrame,
+    keys: list[str],
+    id_col: str,
+    payload: tuple[str, ...] = (),
+    max_size: int | None = None,
+) -> DataFrame:
+    """Blocked pair generation shared by every candidate generator in
+    this module: one row per (bucket, pair) of ids sharing a bucket
+    ``keys`` value — ``(doc_a, doc_b, <p>_a, <p>_b, …)`` for each
+    ``payload`` column, doc_a < doc_b, NOT distinct (a pair sharing
+    several buckets appears once per bucket).
+
+    Ids are grouped per bucket as a sorted ``collect_list`` of
+    ``(id, payload…)`` structs — ONE shuffle of ``rows`` where a
+    self-join would shuffle it twice — and the payload travels with the
+    pairs, so callers need no join back to a per-doc table. Buckets of
+    size < 2 yield no pairs and are dropped; ``max_size`` additionally
+    drops buckets above it (stop-shingle / over-full band removal: a
+    recall trade that changes results). The grouped table is
+    materialized ONCE by an eager checkpoint — the two branches below
+    would otherwise each re-execute the whole upstream pipeline (Spark
+    reuses exchanges, not operator outputs, and not reliably under
+    AQE); the checkpoint is the same data volume as the shuffle that
+    produced it.
+
+    Skew: a bucket's B·(B-1)/2 pairs explode in one task, so buckets
+    above ``HOT_BUCKET_SIZE`` (hordes of identical signatures, template
+    shingles) are re-exploded and self-joined on the bucket key
+    instead, which AQE's skew join splits across tasks. The common case
+    pays one shuffle and zero joins; only hot buckets pay the join."""
+    grouped = (
+        rows.groupBy(*keys)
+        .agg(
+            F.sort_array(
+                F.collect_list(
+                    F.struct(F.col(id_col).alias("id"), *map(F.col, payload))
+                )
+            ).alias("ids")
+        )
+        .filter(F.size("ids") >= 2)
+    )
+    if max_size:
+        grouped = grouped.filter(F.size("ids") <= max_size)
+    grouped = grouped.localCheckpoint(eager=True)
+    out = ["doc_a", "doc_b", *[f"{p}_{s}" for p in payload for s in "ab"]]
+    fields = ", ".join(
+        ["x.id AS doc_a", "y.id AS doc_b"]
+        + [f"x.{p} AS {p}_a, y.{p} AS {p}_b" for p in payload]
+    )
+    small = (
+        grouped.filter(F.size("ids") <= HOT_BUCKET_SIZE)
+        .select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(ids, (x, i) -> "
+                    "transform(slice(ids, i + 2, size(ids)), "
+                    f"y -> struct({fields}))))"
+                )
+            ).alias("p")
+        )
+        .select(*[f"p.{c}" for c in out])
+    )
+    hot = grouped.filter(F.size("ids") > HOT_BUCKET_SIZE).select(
+        *keys, F.explode("ids").alias("x")
+    )
+
+    def side(s: str) -> DataFrame:
+        return hot.select(
+            *keys,
+            F.col("x.id").alias(f"doc_{s}"),
+            *[F.col(f"x.{p}").alias(f"{p}_{s}") for p in payload],
+        )
+
+    hot_pairs = (
+        side("a")
+        .join(side("b"), keys)
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select(*out)
+    )
+    return small.union(hot_pairs)
+
+
 def lsh_candidate_pairs(
     sig: DataFrame,
     id_col: str,
     k: int = 8,
     bands: int = 4,
     max_bucket: int | None = None,
-    split_threshold: int = 1024,
 ) -> DataFrame:
     """X2c: band the signature (rows = k/bands) and emit distinct
     candidate pairs sharing any band bucket.
 
-    Pair generation groups ids per (band_idx, band_value) bucket and
-    explodes the sorted in-bucket pairs — ONE shuffle of the banded
-    table where a self-join would shuffle it twice, and the signature
-    pipeline is evaluated once; the trailing distinct dedups pairs
-    that collide in more than one band.
-
-    Skew: buckets above ``split_threshold`` (hordes of identical
-    signatures — usually exact-duplicate text) take the AQE-splittable
-    self-join branch instead of one-task collect_list explosion (same
-    hybrid as ``_jaccard_core``). ``max_bucket`` additionally DROPS
-    over-full buckets entirely (recall trade; a bucket that hot is
-    near-useless for near-dup). Running exact dedup (X1/X2a) first
-    remains standard pipeline order."""
+    Pair generation is ``_bucket_pairs`` on (band_idx, band_value) —
+    ONE shuffle of the banded table where a self-join would shuffle it
+    twice, the signature pipeline evaluated once, hot buckets (hordes
+    of identical signatures — usually exact-duplicate text) on the
+    AQE-splittable self-join branch; the trailing distinct dedups pairs
+    that collide in more than one band. ``max_bucket`` DROPS over-full
+    buckets entirely (recall trade; a bucket that hot is near-useless
+    for near-dup). Running exact dedup (X1/X2a) first remains standard
+    pipeline order."""
     exploded = lsh_band_membership(sig, id_col, k, bands)
-    grouped = (
-        exploded.groupBy("band_idx", "band_val")
-        .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    if max_bucket:
-        grouped = grouped.filter(F.size("ids") <= max_bucket)
-    # materialize the grouped buckets ONCE: the small and hot branches
-    # below would otherwise each re-execute the whole signature
-    # pipeline (Spark reuses exchanges, not operator outputs — and not
-    # reliably under AQE); the checkpoint is the same data volume as
-    # the shuffle that produced it
-    grouped = grouped.localCheckpoint(eager=True)
-    pair_expr = F.expr(
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids)), y -> struct(x AS doc_a, y AS doc_b))))"
-    )
-    small_pairs = (
-        grouped.filter(F.size("ids") <= split_threshold)
-        .select(F.explode(pair_expr).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-    )
-    hot = grouped.filter(F.size("ids") > split_threshold).select(
-        "band_idx", "band_val", F.explode("ids").alias("d")
-    )
-    hot_pairs = (
-        hot.select("band_idx", "band_val", F.col("d").alias("doc_a"))
-        .join(
-            hot.select("band_idx", "band_val", F.col("d").alias("doc_b")),
-            ["band_idx", "band_val"],
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-    )
-    return small_pairs.union(hot_pairs).distinct()
+    return _bucket_pairs(
+        exploded, ["band_idx", "band_val"], id_col, max_size=max_bucket
+    ).distinct()
 
 
 def ngram_jaccard_pairs(
     sh: DataFrame,
     id_col: str,
     threshold: float,
-    min_df: int | None = None,
     max_df: int | None = None,
 ) -> DataFrame:
     """X2d: exact n-gram Jaccard over pairs sharing ≥1 shingle.
     ``sh`` must be distinct (id, shingle). Jaccard = |∩|/|∪| from
     exact integer counts — cross-engine deterministic.
 
-    ``min_df=2`` drops unique shingles before pair generation (cannot
-    form pairs — result-identical; with the grouped pair generation
-    below it is nearly free). ``max_df`` is the stop-shingle cap for
+    Unique shingles cannot form pairs, so the pair kernel drops them
+    before pair generation. ``max_df`` is the stop-shingle cap for
     100 TB: shingles present in more than ``max_df`` docs are both
     useless for dedup and the skew hazard (quadratic pair explosion in
     one task); capping them bounds the worst bucket. It changes
@@ -202,7 +252,7 @@ def ngram_jaccard_pairs(
         F.count(F.lit(1)).over(Window.partitionBy(id_col)).cast("long").alias("n_sh"),
         F.col("shingle"),
     )
-    return _jaccard_core(sh_n, id_col, threshold, min_df, max_df)
+    return _jaccard_core(sh_n, id_col, threshold, max_df)
 
 
 def ngram_jaccard_from_docs(
@@ -210,7 +260,6 @@ def ngram_jaccard_from_docs(
     id_col: str,
     text_col: str,
     threshold: float,
-    min_df: int | None = None,
     max_df: int | None = None,
 ) -> DataFrame:
     """X2d fused pipeline from raw text: per-doc distinct shingle
@@ -223,7 +272,7 @@ def ngram_jaccard_from_docs(
     ``ngram_jaccard_pairs(doc_shingles(df, ...), ...)``."""
     # Spread a small single-split scan before the heavy per-row chain
     # (r14, catalog.spread_small_scan — no-op at scale); the chain is
-    # consumed by _pair_common's single materializing checkpoint job.
+    # consumed by _bucket_pairs' single materializing checkpoint job.
     arrs = (
         spread_small_scan(df)
         .select(F.col(id_col), tokens(text_col).alias("__t"))
@@ -235,83 +284,32 @@ def ngram_jaccard_from_docs(
         F.size("__sh").cast("long").alias("n_sh"),
         F.explode("__sh").alias("shingle"),
     )
-    return _jaccard_core(sh_n, id_col, threshold, min_df, max_df)
+    return _jaccard_core(sh_n, id_col, threshold, max_df)
 
 
 def _pair_common(
     sh_n: DataFrame,
     id_col: str,
-    min_df: int | None,
     max_df: int | None,
-    split_threshold: int = 1024,
 ) -> DataFrame:
     """Pair generation from a size-annotated shingle table
     ``(id, n_sh, shingle)`` → ``(doc_a, doc_b, n_a, n_b, n_common)``
     — the shared core under X2d Jaccard and X69 containment.
 
-    Group (id, size) structs per shingle — ONE shuffle of the shingle
-    table where a self-join would shuffle it twice — and explode the
-    sorted in-group pairs. Doc sizes TRAVEL WITH THE PAIRS, so no
-    post-join against a sizes table is needed and the whole plan stays
-    linear (upstream shingle computation is evaluated exactly once).
-    Shingles with df=1 yield zero pairs by construction, so min_df≤2
-    pruning is inherent and free; the sort makes doc_a < doc_b
-    structural.
-
-    Skew: the grouped form generates a shingle's B·(B-1)/2 pairs in
-    one task, so buckets larger than ``split_threshold`` take a
-    DIFFERENT path — their ids are re-exploded and self-joined on the
-    shingle key, which AQE's skew-join can split across tasks. Net:
-    the common case pays one shuffle and zero joins; only the rare hot
-    shingles pay the join. ``max_df`` (stop-shingle removal, a recall
-    trade) remains the cheaper guard when hot shingles are known to be
-    boilerplate; running exact dedup (X1) first remains standard
-    pipeline order."""
-    grouped = sh_n.groupBy("shingle").agg(
-        F.sort_array(
-            F.collect_list(F.struct(F.col(id_col).alias("id"), F.col("n_sh").alias("n")))
-        ).alias("ids")
-    )
-    if min_df:
-        grouped = grouped.filter(F.size("ids") >= min_df)
-    if max_df:
-        # stop-shingle cap: hot shingles are useless for dedup and the
-        # skew hazard (quadratic pair explosion in one task) — capping
-        # trades recall for a bounded worst bucket (documented; off in
-        # the oracle-checked query)
-        grouped = grouped.filter(F.size("ids") <= max_df)
-    # materialize ONCE for the two branches below (see
-    # lsh_candidate_pairs for the rationale)
-    grouped = grouped.localCheckpoint(eager=True)
-    pair_expr = F.expr(
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids)), "
-        "y -> struct(x.id AS doc_a, y.id AS doc_b, x.n AS n_a, y.n AS n_b))))"
-    )
-    small_pairs = (
-        grouped.filter(F.size("ids") <= split_threshold)
-        .select(F.explode(pair_expr).alias("p"))
-        .select("p.doc_a", "p.doc_b", "p.n_a", "p.n_b")
-    )
-    # hot buckets: re-explode and self-join on the shingle key so the
-    # quadratic pair generation is spread across tasks (AQE skew-join
-    # splits the oversized partitions)
-    hot = grouped.filter(F.size("ids") > split_threshold).select(
-        "shingle", F.explode("ids").alias("s")
-    )
-    ha = hot.select("shingle", F.col("s.id").alias("doc_a"), F.col("s.n").alias("n_a"))
-    hb = hot.select("shingle", F.col("s.id").alias("doc_b"), F.col("s.n").alias("n_b"))
-    hot_pairs = (
-        ha.join(hb, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "n_a", "n_b")
+    ``_bucket_pairs`` on the shingle: doc sizes TRAVEL WITH THE PAIRS,
+    so no post-join against a sizes table is needed and the whole plan
+    stays linear (upstream shingle computation is evaluated exactly
+    once); hot shingles take the kernel's AQE-splittable self-join.
+    ``max_df`` (stop-shingle removal, a recall trade) remains the
+    cheaper guard when hot shingles are known to be boilerplate;
+    running exact dedup (X1) first remains standard pipeline order."""
+    pairs = _bucket_pairs(
+        sh_n.withColumnRenamed("n_sh", "n"), ["shingle"], id_col, ("n",), max_df
     )
     # (doc_a, doc_b) functionally determines (n_a, n_b); grouping by
     # all four keeps the sizes available without a join.
-    return (
-        small_pairs.union(hot_pairs)
-        .groupBy("doc_a", "doc_b", "n_a", "n_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
+    return pairs.groupBy("doc_a", "doc_b", "n_a", "n_b").agg(
+        F.count(F.lit(1)).alias("n_common")
     )
 
 
@@ -319,13 +317,10 @@ def _jaccard_core(
     sh_n: DataFrame,
     id_col: str,
     threshold: float,
-    min_df: int | None,
     max_df: int | None,
-    split_threshold: int = 1024,
 ) -> DataFrame:
-    """X2d scoring on the ``_pair_common`` pair table (see there for
-    the pair-generation plan/skew discussion)."""
-    common = _pair_common(sh_n, id_col, min_df, max_df, split_threshold)
+    """X2d scoring on the ``_pair_common`` pair table."""
+    common = _pair_common(sh_n, id_col, max_df)
     jac = common.select(
         "doc_a",
         "doc_b",
@@ -741,7 +736,6 @@ def neardup_degree_profile(
     id_col: str,
     text_col: str,
     threshold: float = 0.5,
-    min_df: int | None = 2,
 ) -> DataFrame:
     """X53: near-duplicate graph degree histogram — how many docs
     have 0, 1, 2, … near-dup neighbors at the given Jaccard
@@ -757,9 +751,7 @@ def neardup_degree_profile(
     the degree count is one union + one id-keyed aggregate; the
     histogram is a ≤max-degree-row aggregate. The left join marking
     degree-0 docs is id-keyed equi (AQE-handled)."""
-    pairs = ngram_jaccard_from_docs(
-        df, id_col, text_col, threshold=threshold, min_df=min_df
-    )
+    pairs = ngram_jaccard_from_docs(df, id_col, text_col, threshold=threshold)
     # Both endpoints explode out of ONE pass over the pair table (r14)
     # — the former two-select union referenced (and re-executed) the
     # post-checkpoint pair segment once per branch.
@@ -1047,7 +1039,6 @@ def containment_pairs(
     text_col: str,
     threshold: float = 0.8,
     jaccard_max: float | None = None,
-    min_df: int | None = None,
     max_df: int | None = None,
 ) -> DataFrame:
     """X69: asymmetric containment detection (Broder 1997, "On the
@@ -1081,7 +1072,7 @@ def containment_pairs(
         F.size("__sh").cast("long").alias("n_sh"),
         F.explode("__sh").alias("shingle"),
     )
-    common = _pair_common(sh_n, id_col, min_df, max_df)
+    common = _pair_common(sh_n, id_col, max_df)
     scored = common.select(
         "doc_a",
         "doc_b",
@@ -1186,7 +1177,6 @@ def bbit_minhash_eval(
     text_col: str,
     k: int = 24,
     b: int = 2,
-    min_df: int | None = None,
     max_df: int | None = None,
 ) -> DataFrame:
     """X74: b-bit minwise hashing (Li & König 2010) — store only the
@@ -1234,7 +1224,7 @@ def bbit_minhash_eval(
         F.size("__sh").cast("long").alias("n_sh"),
         F.explode("__sh").alias("shingle"),
     )
-    common = _pair_common(sh_n, id_col, min_df, max_df)
+    common = _pair_common(sh_n, id_col, max_df)
 
     sig = minhash_signatures(
         arrs.select(F.col(id_col), F.explode("__sh").alias("shingle")),
@@ -1297,7 +1287,6 @@ def simhash_hamming_pairs(
     id_col: str,
     text_col: str,
     max_hamming: int = 3,
-    split_threshold: int = 1024,
 ) -> DataFrame:
     """X75: SimHash near-dup PAIRS via block banding (Manku, Jain &
     Sarma 2007 — Google's web-crawl dedup) — completes X2e, which
@@ -1315,15 +1304,15 @@ def simhash_hamming_pairs(
     buckets grow O(N) and in-bucket pair generation quadratically; a
     production crawl dedup widens to 64-bit fingerprints with 16-bit
     blocks (2^16 buckets per table) exactly as Manku does.  The
-    skew machinery is scale-real either way: buckets above
-    ``split_threshold`` take the AQE-splittable self-join branch
-    (X2c's hybrid), so one hot bucket never pins a task.
+    skew machinery is scale-real either way: hot buckets take
+    ``_bucket_pairs``' AQE-splittable self-join branch, so one hot
+    bucket never pins a task.
 
     Output: (doc_a, doc_b, hamming), doc_a < doc_b, distinct."""
     fps = simhash16(df, id_col, text_col)
     exploded = fps.select(
         F.col(id_col),
-        F.col("simhash"),
+        F.col("simhash").alias("fp"),
         F.posexplode(
             F.array(*[
                 F.shiftright(F.col("simhash"), 4 * b).bitwiseAND(15)
@@ -1331,50 +1320,12 @@ def simhash_hamming_pairs(
             ])
         ).alias("block_idx", "block_val"),
     )
-    grouped = (
-        exploded.groupBy("block_idx", "block_val")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(F.col(id_col).alias("id"), F.col("simhash").alias("fp"))
-                )
-            ).alias("ids")
-        )
-        .filter(F.size("ids") >= 2)
-    )
-    grouped = grouped.localCheckpoint(eager=True)
-    pair_expr = F.expr(
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids)), "
-        "y -> struct(x.id AS doc_a, y.id AS doc_b, x.fp AS fa, y.fp AS fb))))"
-    )
-    small = (
-        grouped.filter(F.size("ids") <= split_threshold)
-        .select(F.explode(pair_expr).alias("p"))
-        .select("p.doc_a", "p.doc_b", "p.fa", "p.fb")
-    )
-    hot = grouped.filter(F.size("ids") > split_threshold).select(
-        "block_idx", "block_val", F.explode("ids").alias("s")
-    )
-    ha = hot.select(
-        "block_idx", "block_val",
-        F.col("s.id").alias("doc_a"), F.col("s.fp").alias("fa"),
-    )
-    hb = hot.select(
-        "block_idx", "block_val",
-        F.col("s.id").alias("doc_b"), F.col("s.fp").alias("fb"),
-    )
-    hot_pairs = (
-        ha.join(hb, ["block_idx", "block_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "fa", "fb")
-    )
     return (
-        small.union(hot_pairs)
+        _bucket_pairs(exploded, ["block_idx", "block_val"], id_col, ("fp",))
         .distinct()
         .withColumn(
             "hamming",
-            F.expr("bit_count(fa ^ fb)").cast("int"),
+            F.expr("bit_count(fp_a ^ fp_b)").cast("int"),
         )
         .filter(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
@@ -1717,7 +1668,6 @@ def prefix_filter_jaccard_join(
     text_col: str,
     threshold_num: int = 1,
     threshold_den: int = 2,
-    split_threshold: int = 1024,
 ) -> DataFrame:
     """X86: prefix-filtered similarity join (Chaudhuri/Ganti/Kaushik
     SSJoin 2006; Xiao et al. PPJoin 2008) — the candidate-collapse
@@ -1742,7 +1692,7 @@ def prefix_filter_jaccard_join(
     Scale: the canonical order is the raw (dfreq, shingle) tuple —
     no global rank, no single-partition vocab sort anywhere; per-doc
     prefix selection is an id-partitioned window; candidate
-    generation reuses the grouped single-shuffle pattern; exact
+    generation is the shared ``_bucket_pairs`` kernel; exact
     verification joins the (id, shingle-array) projection twice.
     The pairs carry both docs' shingle COUNTS through candidate
     generation (a long riding the existing shuffle, r9 verdict task
@@ -1795,78 +1745,7 @@ def prefix_filter_jaccard_join(
         )
         .select(F.col(id_col), "n", "shingle")
     )
-    # Same small/hot hybrid as lsh_candidate_pairs / _jaccard_core:
-    # prefix blocks are biased rare by construction, but a template
-    # corpus can still produce a hot prefix shingle, and its B²/2
-    # pairs must not explode in one task — buckets above the split
-    # threshold re-explode into an AQE-skew-splittable self-join.
-    grouped = (
-        prefix.groupBy("shingle")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(F.col(id_col).alias("i"), F.col("n").alias("n"))
-                )
-            ).alias("ids")
-        )
-        .filter(F.size("ids") >= 2)
-        .localCheckpoint(eager=True)
-    )
-    pair_expr = F.expr(
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids)), "
-        "y -> struct(x.i AS doc_a, y.i AS doc_b, "
-        "x.n AS na, y.n AS nb))))"
-    )
-    small_pairs = (
-        grouped.filter(F.size("ids") <= split_threshold)
-        .select(F.explode(pair_expr).alias("p"))
-        .select("p.doc_a", "p.doc_b", "p.na", "p.nb")
-    )
-    hot = grouped.filter(F.size("ids") > split_threshold).select(
-        "shingle", F.explode("ids").alias("d")
-    )
-    hot_pairs = (
-        hot.select(
-            "shingle",
-            F.col("d.i").alias("doc_a"),
-            F.col("d.n").alias("na"),
-        )
-        .join(
-            hot.select(
-                "shingle",
-                F.col("d.i").alias("doc_b"),
-                F.col("d.n").alias("nb"),
-            ),
-            "shingle",
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "na", "nb")
-    )
-    # SSJoin length filter: J >= t forces min(|A|,|B|)/max >= t, so
-    # mismatched-size pairs can never reach the emission test —
-    # pruned here, before the distinct and the verification joins.
-    # The emission test is on ROUND(J, 6) >= t, and round can lift J
-    # by up to 5e-7, so the necessary condition is min/max >= t -
-    # 6e-7 (6e-7 = 6/1e7 absorbs the rounding slack with margin):
-    # integer form  na·den·1e7 >= nb·(num·1e7 - 6·den).  The compare
-    # runs in DECIMAL(38,0): with a ppm-style threshold_den (1e6) the
-    # multiplier reaches 1e13 and a ~1e6-shingle doc would wrap the
-    # raw BIGINT product negative, silently pruning a true duplicate
-    # pair (review finding).
-    lf_num = threshold_num * 10_000_000 - 6 * threshold_den
-    lf_den = threshold_den * 10_000_000
-    cand = (
-        small_pairs.union(hot_pairs)
-        .filter(
-            (F.col("na").cast("decimal(38,0)") * lf_den
-             >= F.col("nb").cast("decimal(38,0)") * lf_num)
-            & (F.col("nb").cast("decimal(38,0)") * lf_den
-               >= F.col("na").cast("decimal(38,0)") * lf_num)
-        )
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    cand = _prefix_candidates(prefix, id_col, threshold_num, threshold_den)
     a = arrs.select(F.col(id_col).alias("doc_a"), F.col("__sh").alias("__sa"))
     b = arrs.select(F.col(id_col).alias("doc_b"), F.col("__sh").alias("__sb"))
     # The intersection size is an explicit COLUMN (r14): inlined, the
@@ -1897,6 +1776,37 @@ def prefix_filter_jaccard_join(
     )
     t = threshold_num / threshold_den
     return scored.filter(F.col("jaccard") >= t)
+
+
+def _prefix_candidates(
+    prefix: DataFrame, id_col: str, threshold_num: int, threshold_den: int
+) -> DataFrame:
+    """X86 candidate stage: distinct (doc_a, doc_b) pairs sharing a
+    prefix shingle of the ``(id, n, shingle)`` prefix table that pass
+    the SSJoin length filter. Prefix blocks are biased rare by
+    construction, but a template corpus can still produce a hot prefix
+    shingle — ``_bucket_pairs`` gives it the AQE-splittable branch."""
+    # SSJoin length filter: J >= t forces min(|A|,|B|)/max >= t, so
+    # mismatched-size pairs can never reach the emission test —
+    # pruned here, before the distinct and the verification joins.
+    # The emission test is on ROUND(J, 6) >= t, and round can lift J
+    # by up to 5e-7, so the necessary condition is min/max >= t -
+    # 6e-7 (6e-7 = 6/1e7 absorbs the rounding slack with margin):
+    # integer form  na·den·1e7 >= nb·(num·1e7 - 6·den).  The compare
+    # runs in DECIMAL(38,0): with a ppm-style threshold_den (1e6) the
+    # multiplier reaches 1e13 and a ~1e6-shingle doc would wrap the
+    # raw BIGINT product negative, silently pruning a true duplicate
+    # pair (review finding).
+    lf_num = threshold_num * 10_000_000 - 6 * threshold_den
+    lf_den = threshold_den * 10_000_000
+    na = F.col("n_a").cast("decimal(38,0)")
+    nb = F.col("n_b").cast("decimal(38,0)")
+    return (
+        _bucket_pairs(prefix, ["shingle"], id_col, ("n",))
+        .filter((na * lf_den >= nb * lf_num) & (nb * lf_den >= na * lf_num))
+        .select("doc_a", "doc_b")
+        .distinct()
+    )
 
 
 # Non-overlapping SEG-token blocks from raw text: canonical tokens
@@ -2537,77 +2447,6 @@ def exact_substring_rewrite(
 # ---------------------------------------------------------------------------
 
 
-def _weighted_term_pairs(
-    wrows: DataFrame,
-    id_col: str,
-    min_df: int = 2,
-    max_df: int | None = None,
-    split_threshold: int = 1024,
-) -> DataFrame:
-    """Weighted sibling of ``_pair_common``: pair generation from a
-    weighted term table ``(id, term, w, s)`` — ``w`` the per-(doc,
-    term) weight, ``s`` a per-doc scalar (norm², weight mass) that
-    must travel with the pairs — emitting one row per SHARED term per
-    candidate pair: ``(doc_a, doc_b, s_a, s_b, w_a, w_b)``. The
-    caller aggregates (dot products, min-sums) per pair.
-
-    Same single-shuffle grouped shape, the same eager checkpoint
-    before the two branches, and the same hot-term split: terms
-    hotter than ``split_threshold`` re-explode into an AQE-skew-
-    splittable self-join; ``max_df`` drops stop-terms entirely (the
-    documented recall/blocking trade — the capped vocabulary IS the
-    vector space, so weights, norms, and scores are all computed on
-    the same capped support and the result is self-consistent)."""
-    grouped = wrows.groupBy("term").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col(id_col).alias("id"),
-                    F.col("w").alias("w"),
-                    F.col("s").alias("s"),
-                )
-            )
-        ).alias("ids")
-    )
-    if min_df:
-        grouped = grouped.filter(F.size("ids") >= min_df)
-    if max_df:
-        grouped = grouped.filter(F.size("ids") <= max_df)
-    grouped = grouped.localCheckpoint(eager=True)
-    pair_expr = F.expr(
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids)), "
-        "y -> struct(x.id AS doc_a, y.id AS doc_b, x.s AS s_a, "
-        "y.s AS s_b, x.w AS w_a, y.w AS w_b))))"
-    )
-    small = (
-        grouped.filter(F.size("ids") <= split_threshold)
-        .select(F.explode(pair_expr).alias("p"))
-        .select("p.doc_a", "p.doc_b", "p.s_a", "p.s_b", "p.w_a", "p.w_b")
-    )
-    hot = grouped.filter(F.size("ids") > split_threshold).select(
-        "term", F.explode("ids").alias("x")
-    )
-    ha = hot.select(
-        "term",
-        F.col("x.id").alias("doc_a"),
-        F.col("x.s").alias("s_a"),
-        F.col("x.w").alias("w_a"),
-    )
-    hb = hot.select(
-        "term",
-        F.col("x.id").alias("doc_b"),
-        F.col("x.s").alias("s_b"),
-        F.col("x.w").alias("w_b"),
-    )
-    hot_pairs = (
-        ha.join(hb, "term")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "s_a", "s_b", "w_a", "w_b")
-    )
-    return small.union(hot_pairs)
-
-
 def _capped_tf(
     df: DataFrame, id_col: str, text_col: str, max_df: int
 ) -> DataFrame:
@@ -2640,7 +2479,6 @@ def tfidf_cosine_pairs(
     text_col: str,
     threshold: float = 0.3,
     max_df: int = 100,
-    split_threshold: int = 1024,
 ) -> DataFrame:
     """X156: all-pairs TF-IDF cosine similarity join (Bayardo, Ma &
     Srikant 2007, "Scaling Up All Pairs Similarity Search") — the
@@ -2656,8 +2494,9 @@ def tfidf_cosine_pairs(
     integers: dot / (sqrt(s_a)·sqrt(s_b)), round-6. sqrt and / are
     IEEE-exact-rounded, so both engines agree bit-for-bit.
 
-    Scale: candidate generation is term-keyed (``_weighted_term_
-    pairs`` — one grouped shuffle, hot-term AQE split); ``max_df``
+    Scale: candidate generation is term-keyed (``_bucket_pairs`` with
+    the weight ``w`` and norm² ``s`` riding the pairs — one grouped
+    shuffle, hot-term AQE split); ``max_df``
     caps the vocabulary (idf already sends df→cap weights toward 0,
     so the cap formalizes what the weighting does — and bounds the
     worst bucket at cap²/2 pairs). Pair aggregation is map-side
@@ -2680,10 +2519,7 @@ def tfidf_cosine_pairs(
         F.sum(F.col("w").cast("decimal(38,0)") * F.col("w")).alias("s")
     )
     wrows = w.join(norms, id_col)
-    pairs = _weighted_term_pairs(
-        wrows, id_col, min_df=2, max_df=None,
-        split_threshold=split_threshold,
-    )
+    pairs = _bucket_pairs(wrows, ["term"], id_col, ("w", "s"))
     scored = (
         pairs.groupBy("doc_a", "doc_b", "s_a", "s_b")
         .agg(
@@ -2713,7 +2549,6 @@ def bag_jaccard_pairs(
     text_col: str,
     threshold_ppm: int = 300_000,
     max_df: int = 100,
-    split_threshold: int = 1024,
 ) -> DataFrame:
     """X157: weighted (bag/multiset) Jaccard similarity join — the
     multiplicity-aware form of X2d: J_w = Σ min(tf_a, tf_b) /
@@ -2727,16 +2562,13 @@ def bag_jaccard_pairs(
     (S_a + S_b − M) with M, S exact BIGINT sums.
 
     Scale: identical candidate shape to X156 (same
-    ``_weighted_term_pairs`` core, w = tf, s = Σ tf)."""
+    ``_bucket_pairs`` core, w = tf, s = Σ tf)."""
     tf = _capped_tf(df, id_col, text_col, max_df).select(
         F.col(id_col), "term", F.col("tf").alias("w")
     )
     mass = tf.groupBy(id_col).agg(F.sum("w").cast("long").alias("s"))
     wrows = tf.join(mass, id_col)
-    pairs = _weighted_term_pairs(
-        wrows, id_col, min_df=2, max_df=None,
-        split_threshold=split_threshold,
-    )
+    pairs = _bucket_pairs(wrows, ["term"], id_col, ("w", "s"))
     scored = (
         pairs.groupBy("doc_a", "doc_b", "s_a", "s_b")
         .agg(F.sum(F.least("w_a", "w_b")).cast("long").alias("__m"))
@@ -2927,7 +2759,7 @@ def cluster_dilution_audit(
         F.size("__sh").cast("long").alias("n_sh"),
         F.explode("__sh").alias("shingle"),
     )
-    pairs = _jaccard_core(sh_n, id_col, threshold, 2, None)
+    pairs = _jaccard_core(sh_n, id_col, threshold, None)
     cc = connected_components(
         df.select(id_col),
         pairs,
@@ -3015,7 +2847,6 @@ def minhash_calibration(
     id_col: str,
     text_col: str,
     k: int = 8,
-    min_df: int = 2,
     max_df: int | None = None,
 ) -> DataFrame:
     """X163: MinHash estimator calibration curve — E[matched
@@ -3050,7 +2881,7 @@ def minhash_calibration(
         F.explode("__sh").alias("shingle"),
     )
     sh = sh_n.select(F.col(id_col), "shingle")
-    common = _pair_common(sh_n, id_col, min_df, max_df)
+    common = _pair_common(sh_n, id_col, max_df)
     jpairs = common.select(
         "doc_a",
         "doc_b",
@@ -3220,7 +3051,6 @@ def source_containment_direction(
     text_col: str,
     source_col: str,
     threshold: float = 0.5,
-    min_df: int | None = 2,
     max_df: int | None = None,
 ) -> DataFrame:
     """X165: directed containment census by source pair — X69 finds
@@ -3254,7 +3084,7 @@ def source_containment_direction(
         F.size("__sh").cast("long").alias("n_sh"),
         F.explode("__sh").alias("shingle"),
     )
-    common = _pair_common(sh_n, id_col, min_df, max_df)
+    common = _pair_common(sh_n, id_col, max_df)
     scored = common.filter(F.col("n_a") != F.col("n_b")).select(
         F.when(F.col("n_a") < F.col("n_b"), F.col("doc_a"))
         .otherwise(F.col("doc_b"))

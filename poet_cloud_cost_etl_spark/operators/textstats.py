@@ -47,26 +47,16 @@ def quality_features(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Quality-score components: length band, stopword ratio, mean
-    word length, duplicate-token ratio — each contributing 0.25.
-
-    ``carry_cols`` ride through the scan-stage select (the
-    lang_scores convention, r15): a consumer that gates the corpus on
-    ``quality_score`` can keep the payload columns it needs in the
-    SAME narrow map instead of paying a corpus-sized join back to the
-    source frame (the former curation_manifest shape re-executed the
-    scan once per join side)."""
-    carries = [F.col(c) for c in carry_cols]
-    t = df.select(F.col(id_col), *carries, tokens(text_col).alias("__t"))
+    word length, duplicate-token ratio — each contributing 0.25."""
+    t = df.select(F.col(id_col), tokens(text_col).alias("__t"))
     n_words = F.size("__t")
     n_stop = F.expr(_in_list("__t", STOPWORDS))
     n_distinct = F.size(F.array_distinct("__t"))
     n_chars_in_words = F.expr("aggregate(__t, 0, (acc, x) -> acc + length(x))")
     feat = t.select(
         F.col(id_col),
-        *carries,
         n_words.alias("n_words"),
         F.round(n_stop.cast("double") / n_words, 6).alias("stopword_ratio"),
         F.round(n_chars_in_words.cast("double") / n_words, 6).alias("mean_word_len"),

@@ -3526,8 +3526,8 @@ ORACLES["embedding_dim_moments"] = """
 
 # X53 near-dup degree histogram (operators/dedup.py:
 # neardup_degree_profile): same pair semantics as
-# dedup_ngram_jaccard (min_df prunes only never-pairing shingles —
-# it cannot change the pair set), degree-0 docs included.
+# dedup_ngram_jaccard (the engine drops only never-pairing df=1
+# shingles — that cannot change the pair set), degree-0 docs included.
 ORACLES["neardup_degree_hist"] = f"""
     WITH {_SHINGLE_CTE},
     sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),

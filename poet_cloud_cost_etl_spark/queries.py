@@ -813,14 +813,14 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2d: exact 3-gram Jaccard near-dup pairs (>= 0.5), fused
     pipeline: per-doc distinct shingle arrays map-side (sizes are
     free), one groupBy(shingle) with in-group pair explosion (df=1
-    shingles produce no pairs, so min_df=2 pruning is inherent), one
-    pair aggregation. Hot shingle buckets above split_threshold take
-    the AQE-splittable self-join branch instead (operators/dedup.py
-    _jaccard_core) — zero rows on this corpus."""
+    shingles produce no pairs and are dropped before the explode), one
+    pair aggregation. Shingle buckets above HOT_BUCKET_SIZE take the
+    AQE-splittable self-join branch instead (operators/dedup.py
+    _bucket_pairs) — zero rows on this corpus."""
     from .operators.dedup import ngram_jaccard_from_docs
 
     d = table(spark, sf_dir, "documents")
-    return ngram_jaccard_from_docs(d, "doc_id", "text", threshold=0.5, min_df=2)
+    return ngram_jaccard_from_docs(d, "doc_id", "text", threshold=0.5)
 
 
 @query("dedup_simhash")
@@ -1606,7 +1606,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.graph import connected_components
 
     d = table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_from_docs(d, "doc_id", "text", threshold=0.5, min_df=2)
+    pairs = ngram_jaccard_from_docs(d, "doc_id", "text", threshold=0.5)
     # threshold-0.5 near-dup graphs are near-cliques (diameter ≤ ~4):
     # fixed_rounds runs 4 lazily-checkpointed rounds in ONE job + one
     # confirming round, instead of a driver-synced probe per round —
@@ -3694,8 +3694,6 @@ def curation_manifest_df(
     ``pin_base`` persists the shared ``base`` frame (MEMORY_AND_DISK)
     instead of recomputing it in each of the four downstream
     branches — the scale-side arm of the A/B documented below."""
-    from pyspark.sql.window import Window
-
     from .operators.dedup import fingerprint, ngram_jaccard_from_docs
     from .operators.graph import connected_components
     from .operators.sampling import mixture_budget_sample
@@ -3731,7 +3729,7 @@ def curation_manifest_df(
         from pyspark import StorageLevel
 
         base = base.persist(StorageLevel.MEMORY_AND_DISK)
-    pairs = ngram_jaccard_from_docs(base, "doc_id", "text", threshold=0.5, min_df=2)
+    pairs = ngram_jaccard_from_docs(base, "doc_id", "text", threshold=0.5)
     cc = connected_components(
         base.select("doc_id"),
         pairs,
@@ -3833,7 +3831,7 @@ def q_neardup_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import neardup_degree_profile
 
     d = table(spark, sf_dir, "documents")
-    return neardup_degree_profile(d, "doc_id", "text", threshold=0.5, min_df=2)
+    return neardup_degree_profile(d, "doc_id", "text", threshold=0.5)
 
 
 @query("ann_ivf_pq")
@@ -4211,8 +4209,7 @@ def q_license_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.graph import connected_components
 
     d = table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_from_docs(d, "doc_id", "text", threshold=0.5,
-                                    min_df=2)
+    pairs = ngram_jaccard_from_docs(d, "doc_id", "text", threshold=0.5)
     cc = connected_components(
         d.select("doc_id"), pairs,
         id_col="doc_id", src_col="doc_a", dst_col="doc_b",
@@ -4292,7 +4289,7 @@ def q_dedup_cluster_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Bounded pair set shared by CC and the density scorer —
     # materialized once (r14, the X193 shared-scan discipline).
     pairs = ngram_jaccard_from_docs(
-        d, "doc_id", "text", threshold=0.5, min_df=2
+        d, "doc_id", "text", threshold=0.5
     ).localCheckpoint(eager=True)
     cc = connected_components(
         d.select("doc_id"), pairs,
@@ -5062,7 +5059,7 @@ def q_dedup_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the threshold_sweep/X193 shared-scan discipline); un-pinned,
     # each consumer re-executed the pair explode + aggregate.
     pairs = ngram_jaccard_from_docs(
-        d, "doc_id", "text", threshold=0.5, min_df=2
+        d, "doc_id", "text", threshold=0.5
     ).localCheckpoint(eager=True)
     cc = connected_components(
         d.select("doc_id"), pairs,
@@ -5617,9 +5614,7 @@ def _r10q_dedup_survival_by_source(
         .select("doc_id"),
         "3_fingerprint",
     )
-    pairs = ngram_jaccard_from_docs(
-        d, "doc_id", "text", threshold=0.5, min_df=2
-    )
+    pairs = ngram_jaccard_from_docs(d, "doc_id", "text", threshold=0.5)
     cc = connected_components(
         d.select("doc_id"),
         pairs,

@@ -45,6 +45,7 @@ def main() -> None:
     from poet_cloud_cost_etl_spark.catalog import spread_small_scan, table
     from poet_cloud_cost_etl_spark.config import EngineConfig
     from poet_cloud_cost_etl_spark.operators.dedup import (
+        _prefix_candidates,
         prefix_filter_jaccard_join,
         shingles,
         tokens,
@@ -93,67 +94,6 @@ def main() -> None:
             .select(F.col("doc_id"), "n", "shingle")
         )
 
-    def grouped_df(prefix):
-        return (
-            prefix.groupBy("shingle")
-            .agg(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct(
-                            F.col("doc_id").alias("i"), F.col("n").alias("n")
-                        )
-                    )
-                ).alias("ids")
-            )
-            .filter(F.size("ids") >= 2)
-        )
-
-    def cand_df(grouped, split_threshold=1024):
-        pair_expr = F.expr(
-            "flatten(transform(ids, (x, i) -> "
-            "transform(slice(ids, i + 2, size(ids)), "
-            "y -> struct(x.i AS doc_a, y.i AS doc_b, "
-            "x.n AS na, y.n AS nb))))"
-        )
-        small_pairs = (
-            grouped.filter(F.size("ids") <= split_threshold)
-            .select(F.explode(pair_expr).alias("p"))
-            .select("p.doc_a", "p.doc_b", "p.na", "p.nb")
-        )
-        hot = grouped.filter(F.size("ids") > split_threshold).select(
-            "shingle", F.explode("ids").alias("d")
-        )
-        hot_pairs = (
-            hot.select(
-                "shingle",
-                F.col("d.i").alias("doc_a"),
-                F.col("d.n").alias("na"),
-            )
-            .join(
-                hot.select(
-                    "shingle",
-                    F.col("d.i").alias("doc_b"),
-                    F.col("d.n").alias("nb"),
-                ),
-                "shingle",
-            )
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b", "na", "nb")
-        )
-        lf_num = num * 10_000_000 - 6 * den
-        lf_den = den * 10_000_000
-        return (
-            small_pairs.union(hot_pairs)
-            .filter(
-                (F.col("na").cast("decimal(38,0)") * lf_den
-                 >= F.col("nb").cast("decimal(38,0)") * lf_num)
-                & (F.col("nb").cast("decimal(38,0)") * lf_den
-                   >= F.col("na").cast("decimal(38,0)") * lf_num)
-            )
-            .select("doc_a", "doc_b")
-            .distinct()
-        )
-
     def verify_df(cand, arrs):
         a = arrs.select(
             F.col("doc_id").alias("doc_a"), F.col("__sh").alias("__sa")
@@ -186,8 +126,7 @@ def main() -> None:
     # --- counts for context (once) ----------------------------------
     arrs = arrs_ck()
     prefix = prefix_df(arrs)
-    grouped = grouped_df(prefix).localCheckpoint(eager=True)
-    cand = cand_df(grouped)
+    cand = _prefix_candidates(prefix, "doc_id", num, den)
     n_docs = arrs.count()
     n_pref = prefix.count()
     n_cand = cand.count()
@@ -200,9 +139,15 @@ def main() -> None:
     t_arr = time.perf_counter() - t_arr0
     print(f"s1b arrs eager ckpt wall: {t_arr:.3f}s")
     timed(spark, "s2 prefix (dfreq join + window)", lambda: prefix_df(arrs2))
-    g2 = grouped_df(prefix_df(arrs2)).localCheckpoint(eager=True)
-    timed(spark, "s3 cand (pairs+lenfilter+distinct)", lambda: cand_df(g2))
-    cand2 = cand_df(g2).localCheckpoint(eager=True)
+    prefix2 = prefix_df(arrs2).localCheckpoint(eager=True)
+    timed(
+        spark,
+        "s3 cand (bucket ckpt+pairs+lenfilter+distinct)",
+        lambda: _prefix_candidates(prefix2, "doc_id", num, den),
+    )
+    cand2 = _prefix_candidates(prefix2, "doc_id", num, den).localCheckpoint(
+        eager=True
+    )
     timed(spark, "s4 verify (2 joins + intersect)",
           lambda: verify_df(cand2, arrs2))
     timed(

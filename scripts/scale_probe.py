@@ -310,7 +310,7 @@ def _bbit_pair_core_only(spark, sf_dir, k_scale):
         F.size("__sh").cast("long").alias("n_sh"),
         F.explode("__sh").alias("shingle"),
     )
-    return _pair_common(sh_n, "doc_id", None, None)
+    return _pair_common(sh_n, "doc_id", None)
 
 
 def _hubness_ivf_scaled(spark, sf_dir, k_scale):

@@ -1,26 +1,26 @@
-"""X2d scale knobs: min_df must be result-identical (unique shingles
-cannot co-occur), max_df is the documented recall-trading stop-shingle
-cap (changes results, so it stays off in the oracle-checked query)."""
+"""Blocked pair generation: every dedup candidate generator runs on the
+one ``_bucket_pairs`` kernel, whose small/hot split is internal
+(``HOT_BUCKET_SIZE``) and result-neutral; ``max_df`` is the documented
+recall-trading stop-shingle cap (changes results, so it stays off in
+the oracle-checked query)."""
 
 from __future__ import annotations
 
+import inspect
+import re
+
+import pytest
+
 from poet_cloud_cost_etl_spark.catalog import table
+from poet_cloud_cost_etl_spark.operators import dedup
 from poet_cloud_cost_etl_spark.operators.dedup import doc_shingles, ngram_jaccard_pairs
+from poet_cloud_cost_etl_spark.plans import explain as X
 
 from tests.conftest import SF_MEDIUM, SF_SMALL
 
 
 def _pairs(df):
     return {(r.doc_a, r.doc_b, r.jaccard) for r in df.collect()}
-
-
-def test_min_df_is_result_identical(spark):
-    d = table(spark, SF_MEDIUM, "documents")
-    sh = doc_shingles(d, "doc_id", "text")
-    base = _pairs(ngram_jaccard_pairs(sh, "doc_id", threshold=0.5))
-    pruned = _pairs(ngram_jaccard_pairs(sh, "doc_id", threshold=0.5, min_df=2))
-    assert base, "fixture should contain near-dup pairs"
-    assert pruned == base
 
 
 def test_max_df_only_removes_pairs(spark):
@@ -33,32 +33,73 @@ def test_max_df_only_removes_pairs(spark):
     assert capped_keys <= base_keys
 
 
-def test_jaccard_hot_bucket_branch_is_result_identical(spark):
+_GENERATORS = {
+    "lsh_candidate_pairs": lambda d: dedup.lsh_candidate_pairs(
+        dedup.minhash_signatures(doc_shingles(d, "doc_id", "text"), "doc_id"),
+        "doc_id",
+    ),
+    "ngram_jaccard_from_docs": lambda d: dedup.ngram_jaccard_from_docs(
+        d, "doc_id", "text", 0.5
+    ),
+    "containment_pairs": lambda d: dedup.containment_pairs(
+        d, "doc_id", "text", threshold=0.5
+    ),
+    "simhash_hamming_pairs": lambda d: dedup.simhash_hamming_pairs(
+        d, "doc_id", "text"
+    ),
+    "prefix_filter_jaccard_join": lambda d: dedup.prefix_filter_jaccard_join(
+        d, "doc_id", "text"
+    ),
+    "tfidf_cosine_pairs": lambda d: dedup.tfidf_cosine_pairs(d, "doc_id", "text"),
+    "bag_jaccard_pairs": lambda d: dedup.bag_jaccard_pairs(d, "doc_id", "text"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_GENERATORS))
+def test_hot_bucket_branch_is_result_identical(spark, monkeypatch, name):
     """Forcing every bucket through the skew-escape self-join branch
-    (split_threshold=1) must produce exactly the grouped-path pairs."""
-    from pyspark.sql import functions as F
-
-    from poet_cloud_cost_etl_spark.catalog import table
-    from poet_cloud_cost_etl_spark.operators.dedup import (
-        _jaccard_core,
-        ngram_jaccard_from_docs,
-        shingles,
-        tokens,
-    )
-
+    (HOT_BUCKET_SIZE=1) must produce exactly the grouped-path rows."""
     d = table(spark, SF_SMALL, "documents")
-    grouped = sorted(
-        map(tuple, ngram_jaccard_from_docs(d, "doc_id", "text", 0.5, min_df=2).collect())
-    )
-    arrs = (
-        d.select(F.col("doc_id"), tokens("text").alias("__t"))
-        .select("doc_id", F.array_distinct(shingles("__t")).alias("__sh"))
-        .filter(F.size("__sh") > 0)
-    )
-    sh_n = arrs.select(
-        "doc_id", F.size("__sh").cast("long").alias("n_sh"), F.explode("__sh").alias("shingle")
-    )
-    joined = sorted(
-        map(tuple, _jaccard_core(sh_n, "doc_id", 0.5, 2, None, split_threshold=1).collect())
-    )
+    make = _GENERATORS[name]
+    grouped = sorted(map(tuple, make(d).collect()))
+    monkeypatch.setattr(dedup, "HOT_BUCKET_SIZE", 1)
+    joined = sorted(map(tuple, make(d).collect()))
     assert grouped == joined and grouped
+
+
+def test_bucket_pairs_contract(spark, monkeypatch):
+    """One row per (bucket, pair), doc_a < doc_b, payload suffixed
+    _a/_b; singleton and over-``max_size`` buckets yield nothing; the
+    hot threshold is read when the plan is built."""
+    rows = spark.createDataFrame(
+        [
+            ("k1", 3, 30), ("k1", 1, 10), ("k1", 2, 20),  # 3 pairs
+            ("k2", 1, 10), ("k2", 3, 30),  # 1 pair
+            ("k3", 9, 90),  # singleton: none
+        ],
+        ["key", "doc_id", "w"],
+    )
+    want = sorted([
+        (1, 2, 10, 20), (1, 3, 10, 30), (2, 3, 20, 30), (1, 3, 10, 30),
+    ])
+    for hot in (1024, 1):
+        monkeypatch.setattr(dedup, "HOT_BUCKET_SIZE", hot)
+        pairs = dedup._bucket_pairs(rows, ["key"], "doc_id", ("w",))
+        assert pairs.columns == ["doc_a", "doc_b", "w_a", "w_b"]
+        assert sorted(map(tuple, pairs.collect())) == want
+        capped = dedup._bucket_pairs(rows, ["key"], "doc_id", max_size=2)
+        assert sorted(map(tuple, capped.collect())) == [(1, 3)]
+    monkeypatch.setattr(dedup, "HOT_BUCKET_SIZE", 7)
+    plan = X.physical_plan(dedup._bucket_pairs(rows, ["key"], "doc_id"))
+    assert re.search(r"size\(ids#\d+, true\) > 7\)", plan), plan
+
+
+def test_no_bucket_knobs():
+    """The small/hot split and the df=1 prune are internal to the pair
+    kernel: no public dedup operator exposes them."""
+    for name, fn in inspect.getmembers(dedup, inspect.isfunction):
+        if name.startswith("_") or fn.__module__ != dedup.__name__:
+            continue
+        params = inspect.signature(fn).parameters
+        assert "split_threshold" not in params, name
+        assert "min_df" not in params, name

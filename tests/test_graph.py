@@ -73,7 +73,7 @@ def test_star_matches_minlabel_on_real_pair_graph(spark):
 
     d = table(spark, SF_MEDIUM, "documents")
     pairs = ngram_jaccard_from_docs(
-        d, "doc_id", "text", threshold=0.5, min_df=2
+        d, "doc_id", "text", threshold=0.5
     ).localCheckpoint(eager=True)
     assert pairs.count() > 0, "fixture pair graph unexpectedly empty"
     nodes = d.select("doc_id")
@@ -114,7 +114,7 @@ def test_fixed_rounds_matches_on_real_pair_graph(spark):
 
     d = table(spark, SF_MEDIUM, "documents")
     pairs = ngram_jaccard_from_docs(
-        d, "doc_id", "text", threshold=0.5, min_df=2
+        d, "doc_id", "text", threshold=0.5
     ).localCheckpoint(eager=True)
     nodes = d.select("doc_id")
     kw = dict(id_col="doc_id", src_col="doc_a", dst_col="doc_b")

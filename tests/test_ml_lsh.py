@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from poet_cloud_cost_etl_spark.catalog import table
 from poet_cloud_cost_etl_spark.operators.dedup import doc_shingles, ngram_jaccard_pairs
 
-from tests.conftest import SF_MEDIUM, SF_SMALL
+from tests.conftest import SF_MEDIUM
 
 
 def test_minhash_lsh_ml_recall(spark):
@@ -65,22 +65,3 @@ def test_brp_lsh_ml_neighbors(spark):
     assert nn[0].vec_id == 0 and abs(nn[0].distCol) < 1e-9  # itself first
     dists = [r.distCol for r in nn]
     assert dists == sorted(dists)
-
-
-def test_lsh_hot_bucket_branch_is_result_identical(spark):
-    """Forcing every bucket through the skew-escape join branch
-    (split_threshold=1) must produce exactly the grouped-path pairs."""
-    from poet_cloud_cost_etl_spark.catalog import table
-    from poet_cloud_cost_etl_spark.operators.dedup import (
-        doc_shingles,
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
-
-    d = table(spark, SF_SMALL, "documents")
-    sig = minhash_signatures(doc_shingles(d, "doc_id", "text"), "doc_id")
-    a = sorted(map(tuple, lsh_candidate_pairs(sig, "doc_id").collect()))
-    b = sorted(
-        map(tuple, lsh_candidate_pairs(sig, "doc_id", split_threshold=1).collect())
-    )
-    assert a == b and a

@@ -150,7 +150,7 @@ def test_neardup_degree_profile_histogram(spark):
     hist = {
         r["degree"]: r["n_docs"]
         for r in neardup_degree_profile(
-            df, "doc_id", "text", threshold=0.5, min_df=2
+            df, "doc_id", "text", threshold=0.5
         ).collect()
     }
     assert hist == {0: 1, 2: 3}

@@ -73,7 +73,7 @@ def test_spread_preserves_results_through_heavy_chain(spark):
         )
         return sorted(
             tuple(r) for r in _jaccard_core(
-                sh_n, "doc_id", 0.5, 2, None
+                sh_n, "doc_id", 0.5, None
             ).collect()
         )
 
@@ -152,6 +152,8 @@ def test_parse_spark_bytes_suffixes():
     assert _parse_spark_bytes("1g") == 1024 ** 3
     assert _parse_spark_bytes("512k") == 512 * 1024
     assert _parse_spark_bytes(" 64m ") == 64 * 1024 * 1024
+    assert _parse_spark_bytes("1p") == 1024 ** 5
+    assert _parse_spark_bytes("2pb") == 2 * 1024 ** 5
 
 
 def test_suffixed_max_partition_bytes_feeds_estimate(spark, tmp_path):
