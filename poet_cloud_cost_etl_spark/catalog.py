@@ -174,6 +174,20 @@ def _input_bytes_and_files(path: str) -> tuple[int, int]:
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table (no view side-effect)."""
     ensure_session_confs(spark)
+    split_conf = spark.conf.get(
+        "spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024)
+    )
+    try:
+        max_split = _parse_spark_bytes(split_conf)
+    except (TypeError, ValueError):
+        max_split = 128 * 1024 * 1024
+    # Spark itself fails late on 0 ("step cannot be 0") and silently
+    # reads no rows on a negative value: reject both before reading.
+    if max_split <= 0:
+        raise ValueError(
+            "spark.sql.files.maxPartitionBytes must be positive, "
+            f"got {split_conf!r}"
+        )
     path = os.path.join(sf_dir, f"{name}.parquet")
     df = spark.read.parquet(path)
     for c in EVENT_TS_COLUMNS.get(name, []):
@@ -193,14 +207,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Python attribute: it survives only on this frame object, so
     # operators receiving derived/filtered frames conservatively skip
     # spreading.
-    try:
-        max_split = _parse_spark_bytes(
-            spark.conf.get(
-                "spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024)
-            )
-        )
-    except (TypeError, ValueError):
-        max_split = 128 * 1024 * 1024
     try:
         open_cost = _parse_spark_bytes(
             spark.conf.get(

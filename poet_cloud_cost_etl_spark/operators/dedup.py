@@ -2441,9 +2441,7 @@ def exact_substring_rewrite(
 
 
 # ---------------------------------------------------------------------------
-# r11-queue: implemented + oracled in round 10, registration deferred
-# to round 11 (the r9->r10 staging pattern: the r10 window must cover
-# the 10-name cohort + the r4-stale backlog first).
+# r11-cohort operators (registered in queries.py's r11-cohort block).
 # ---------------------------------------------------------------------------
 
 
@@ -2935,9 +2933,7 @@ def minhash_calibration(
 
 
 # ---------------------------------------------------------------------------
-# r12-queue: implemented + oracled in round 11, registration deferred
-# to round 12 (the r9→r10→r11 staging protocol: the r11 window must
-# cover the 8-name r11 cohort + the r5-stale backlog first).
+# r12-cohort operators (registered in queries.py's r12-cohort block).
 # ---------------------------------------------------------------------------
 
 

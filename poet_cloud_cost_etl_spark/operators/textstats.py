@@ -3385,8 +3385,7 @@ def langid_agreement_by_source(
 
 
 # ---------------------------------------------------------------------------
-# r12-queue: implemented + oracled in round 11, registration deferred
-# to round 12 (the r9→r10→r11 staging protocol).
+# r12-cohort operators (registered in queries.py's r12-cohort block).
 # ---------------------------------------------------------------------------
 
 

@@ -7450,14 +7450,9 @@ ORACLES["pc_variance_explained"] = f"""
 
 
 # ------------------------------------------------------------------
-# r10-cohort oracles: written and parity-proven in round 9
-# (tests/test_r10_queue.py), merged into ORACLES in round 10 when the
-# matching @query registrations landed (queries.py r10-cohort block).
-# The dict keeps its own name so the round-9 parity tests keep
-# reading it directly; ORACLES.update() below makes them official.
-R10_QUEUED_ORACLES: dict[str, str] = {}
-
-R10_QUEUED_ORACLES["pii_cooccurrence_audit"] = r"""
+# r10-cohort oracles: twins of the queries.py r10-cohort block, also
+# checked at SF_SMALL by tests/test_r10_queue.py.
+ORACLES["pii_cooccurrence_audit"] = r"""
     WITH flags AS (
         SELECT source,
             regexp_matches(text,
@@ -7491,7 +7486,7 @@ R10_QUEUED_ORACLES["pii_cooccurrence_audit"] = r"""
     FROM agg ORDER BY source
 """
 
-R10_QUEUED_ORACLES["uniform_group_sample"] = """
+ORACLES["uniform_group_sample"] = """
     SELECT source, doc_id, draw_rank FROM (
         SELECT source, doc_id,
             CAST(ROW_NUMBER() OVER (
@@ -7503,7 +7498,7 @@ R10_QUEUED_ORACLES["uniform_group_sample"] = """
     ORDER BY source, draw_rank
 """
 
-R10_QUEUED_ORACLES["dedup_survival_by_source"] = """
+ORACLES["dedup_survival_by_source"] = """
     WITH RECURSIVE
     toks AS (SELECT doc_id, string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g')), ' +') AS t FROM documents),
     sh AS (
@@ -7572,7 +7567,7 @@ R10_QUEUED_ORACLES["dedup_survival_by_source"] = """
     ORDER BY st.source, st.stage
 """
 
-R10_QUEUED_ORACLES["lm_heldout_eval"] = """
+ORACLES["lm_heldout_eval"] = """
     WITH toks AS (
         SELECT doc_id, source,
             string_split_regex(trim(regexp_replace(lower(text),
@@ -7625,7 +7620,7 @@ R10_QUEUED_ORACLES["lm_heldout_eval"] = """
     GROUP BY d.source ORDER BY d.source
 """
 
-R10_QUEUED_ORACLES["exact_substring_cut_spans"] = """
+ORACLES["exact_substring_cut_spans"] = """
     WITH toks AS (SELECT doc_id, string_split_regex(trim(regexp_replace(
             lower(text), '[^a-z0-9 ]', '', 'g')), ' +') AS t FROM documents),
     pos AS (
@@ -7658,7 +7653,7 @@ R10_QUEUED_ORACLES["exact_substring_cut_spans"] = """
     ORDER BY doc_id, span_start
 """
 
-R10_QUEUED_ORACLES["exact_substring_rewrite"] = """
+ORACLES["exact_substring_rewrite"] = """
     WITH toks AS (SELECT doc_id, string_split_regex(trim(regexp_replace(
             lower(text), '[^a-z0-9 ]', '', 'g')), ' +') AS t FROM documents),
     pos AS (
@@ -7709,7 +7704,7 @@ R10_QUEUED_ORACLES["exact_substring_rewrite"] = """
     FROM kept GROUP BY doc_id ORDER BY doc_id
 """
 
-R10_QUEUED_ORACLES["langid_source_agreement"] = """
+ORACLES["langid_source_agreement"] = """
     WITH toks AS (
         SELECT doc_id, lang, source, string_split_regex(trim(regexp_replace(
             lower(text), '[^a-z0-9 ]', '', 'g')), ' +') AS t FROM documents
@@ -7772,7 +7767,7 @@ R10_QUEUED_ORACLES["langid_source_agreement"] = """
     ORDER BY t.source
 """
 
-R10_QUEUED_ORACLES["embedding_participation_ratio"] = """
+ORACLES["embedding_participation_ratio"] = """
     WITH q AS (
         SELECT list_transform(embedding,
             x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS a
@@ -7813,24 +7808,13 @@ R10_QUEUED_ORACLES["embedding_participation_ratio"] = """
 """
 
 
-# r10-cohort registration (see the block comment above): every queued
-# oracle becomes official alongside its @query twin in queries.py.
-ORACLES.update(R10_QUEUED_ORACLES)
-
-
 # ------------------------------------------------------------------
-# r11-queue oracles: written + parity-proven in round 10
-# (tests/test_r11_queue.py), registration deferred to round 11 so the
-# r10 window covers the 10-name cohort + the r4-stale backlog (the
-# same staging protocol r9 used for the r10 cohort). Round 11:
-# decorate the _r11q_* functions in queries.py with @query(...) and
-# ORACLES.update(R11_QUEUED_ORACLES).
-R11_QUEUED_ORACLES: dict[str, str] = {}
-
+# r11-cohort oracles: twins of the queries.py r11-cohort block, also
+# checked at SF_SMALL by tests/test_r11_queue.py.
 # X156 (operators/dedup.py: tfidf_cosine_pairs): exact-integer tf·idf
 # weights over the df<=100-capped vocabulary, HUGEINT norm²/dot, one
 # final double sqrt·sqrt division, round-6.
-R11_QUEUED_ORACLES["tfidf_cosine_pairs"] = f"""
+ORACLES["tfidf_cosine_pairs"] = f"""
     WITH tf AS (
         SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
         FROM (SELECT doc_id, unnest({_TOKS.format(col='text')}) AS term
@@ -7870,7 +7854,7 @@ R11_QUEUED_ORACLES["tfidf_cosine_pairs"] = f"""
 
 # X157 (operators/dedup.py: bag_jaccard_pairs): multiset Jaccard in
 # pure integer arithmetic over the same capped vocabulary.
-R11_QUEUED_ORACLES["bag_jaccard_pairs"] = f"""
+ORACLES["bag_jaccard_pairs"] = f"""
     WITH tf AS (
         SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
         FROM (SELECT doc_id, unnest({_TOKS.format(col='text')}) AS term
@@ -7907,7 +7891,7 @@ R11_QUEUED_ORACLES["bag_jaccard_pairs"] = f"""
 # X158 (operators/packing.py: cdc_chunk_stats): content-defined
 # chunk boundaries (unit hash of the token ≡ 0 mod 8), per-source
 # chunk-duplication census.
-R11_QUEUED_ORACLES["cdc_chunk_stats"] = f"""
+ORACLES["cdc_chunk_stats"] = f"""
     WITH base AS (
         SELECT doc_id, source,
             list_filter({_TOKS.format(col='text')}, x -> x != '') AS arr
@@ -7955,7 +7939,7 @@ R11_QUEUED_ORACLES["cdc_chunk_stats"] = f"""
 # X159 (operators/embeddings.py: embedding_drift_by_label): id-parity
 # halves, exact integer sum vectors, HUGEINT dot/norms², one double
 # expression at the end.
-R11_QUEUED_ORACLES["embedding_drift_by_label"] = """
+ORACLES["embedding_drift_by_label"] = """
     WITH dims AS (
         SELECT label, vec_id % 2 AS half,
             CAST(i AS INTEGER) - 1 AS dim,
@@ -8004,7 +7988,7 @@ R11_QUEUED_ORACLES["embedding_drift_by_label"] = """
 
 # X160 (operators/dedup.py: duplication_gini): exact Gini over the
 # multiplicity lattice, HUGEINT rank-sum accumulation.
-R11_QUEUED_ORACLES["duplication_gini"] = """
+ORACLES["duplication_gini"] = """
     WITH sizes AS (
         SELECT source, text, CAST(COUNT(*) AS BIGINT) AS v
         FROM documents GROUP BY 1, 2
@@ -8038,7 +8022,7 @@ R11_QUEUED_ORACLES["duplication_gini"] = """
 
 # X161 (operators/dedup.py: line_dedup_by_source): CCNet-style
 # sentence/line duplication census per source.
-R11_QUEUED_ORACLES["line_dedup_by_source"] = r"""
+ORACLES["line_dedup_by_source"] = r"""
     WITH lines AS (
         SELECT source, md5(trim(l)) AS h
         FROM (SELECT source,
@@ -8066,7 +8050,7 @@ R11_QUEUED_ORACLES["line_dedup_by_source"] = r"""
 # X162 (operators/dedup.py: cluster_dilution_audit): recursive-CC
 # clusters at J>=0.5, star-edge direct Jaccard (integer ppm),
 # per-size-bucket dilution panel.
-R11_QUEUED_ORACLES["cluster_dilution_audit"] = f"""
+ORACLES["cluster_dilution_audit"] = f"""
     WITH RECURSIVE {_SHINGLE_CTE},
     sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_sh
               FROM sh GROUP BY doc_id),
@@ -8149,7 +8133,7 @@ R11_QUEUED_ORACLES["cluster_dilution_audit"] = f"""
 
 # X163 (operators/dedup.py: minhash_calibration): exact-Jaccard
 # deciles vs empirical matched-minhash fraction, k=8 signatures.
-R11_QUEUED_ORACLES["minhash_calibration"] = f"""
+ORACLES["minhash_calibration"] = f"""
     WITH {_SHINGLE_CTE},
     sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_sh
               FROM sh GROUP BY doc_id),
@@ -8191,27 +8175,15 @@ R11_QUEUED_ORACLES["minhash_calibration"] = f"""
 """
 
 
-# r11-cohort registration (round 11, VERDICT r10 task 1): every queued
-# oracle becomes official alongside its @query twin in queries.py.
-ORACLES.update(R11_QUEUED_ORACLES)
-
-
 # ------------------------------------------------------------------
-# r12-cohort oracles: written + parity-proven in round 11
-# (tests/test_r12_queue.py), registration deferred to round 12 per
-# the staging protocol (the r11 window covered the r11 cohort + the
-# r5-stale backlog). Registered in round 12 (VERDICT r11 task 1):
-# the _r12q_* functions in queries.py carry @query(...) and the
-# ORACLES.update(R12_QUEUED_ORACLES) below makes each oracle
-# official alongside its @query twin.
-R12_QUEUED_ORACLES: dict[str, str] = {}
-
+# r12-cohort oracles: twins of the queries.py r12-cohort block, also
+# checked at SF_SMALL by tests/test_r12_queue.py.
 # X164 (operators/dedup.py: winnow_fingerprint_census): Schleimer
 # 2003 winnowing over the 3-gram 60-bit md5 hash stream, rightmost
 # minimum of every w=4 window (LEAST + rightmost-CASE == the Spark
 # side's struct-min over (h, -pos)), distinct selected positions,
 # per-source shared-fingerprint census.
-R12_QUEUED_ORACLES["winnow_fingerprints"] = f"""
+ORACLES["winnow_fingerprints"] = f"""
     WITH toks AS (SELECT doc_id, source, {_TOKS.format(col='text')} AS t
                   FROM documents),
     grams AS (
@@ -8252,7 +8224,7 @@ R12_QUEUED_ORACLES["winnow_fingerprints"] = f"""
 # X165 (operators/dedup.py: source_containment_direction): X69's
 # containment pairs with the smaller-side doc as the contained
 # direction, integer-ppm containment, per directed source-pair cell.
-R12_QUEUED_ORACLES["source_containment_direction"] = f"""
+ORACLES["source_containment_direction"] = f"""
     WITH {_SHINGLE_CTE},
     sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n
               FROM sh GROUP BY 1),
@@ -8288,7 +8260,7 @@ R12_QUEUED_ORACLES["source_containment_direction"] = f"""
 # spans projected onto 1-based half-open position deciles
 # [1 + (d*n)//10, 1 + ((d+1)*n)//10), exact integer interval overlap,
 # per (source, decile) dup-token mass over the decile's true mass.
-R12_QUEUED_ORACLES["dup_span_position_profile"] = """
+ORACLES["dup_span_position_profile"] = """
     WITH toks AS (SELECT doc_id, source, string_split_regex(trim(
             regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g')), ' +') AS t
             FROM documents),
@@ -8357,7 +8329,7 @@ R12_QUEUED_ORACLES["dup_span_position_profile"] = """
 # when the corpus is small enough that k = 8 (sf0.001/0.01: N = 500).
 # The oracle models the FLAT regime (k <= 32, i.e. through sf0.1);
 # the tree regime above it is probe-verified, not oracle-run.
-R12_QUEUED_ORACLES["semantic_decontamination"] = f"""
+ORACLES["semantic_decontamination"] = f"""
     WITH kp AS (
         SELECT GREATEST(8, CAST(CEIL(COUNT(*) / 64.0) AS BIGINT)) AS k
         FROM embeddings
@@ -8407,7 +8379,7 @@ R12_QUEUED_ORACLES["semantic_decontamination"] = f"""
 # the tree regime is probe-verified).  The original % 101 query set
 # grew ∝ N and made BOTH truth and candidate volume quadratic
 # (33.9× at 10×, BENCH_SF1_r12).
-R12_QUEUED_ORACLES["ivf_nprobe_recall_curve"] = f"""
+ORACLES["ivf_nprobe_recall_curve"] = f"""
     WITH kp AS (
         SELECT GREATEST(8, CAST(CEIL(COUNT(*) / 64.0) AS BIGINT)) AS k
         FROM embeddings
@@ -8478,7 +8450,7 @@ R12_QUEUED_ORACLES["ivf_nprobe_recall_curve"] = f"""
 # smoothed unigram cross-entropy per ordered source pair in the X99
 # scaled-integer-ln convention; HUGEINT numerator matches the Spark
 # side's DECIMAL(38,0).
-R12_QUEUED_ORACLES["source_crossentropy_matrix"] = f"""
+ORACLES["source_crossentropy_matrix"] = f"""
     WITH cnt AS (
         SELECT s, w, CAST(COUNT(*) AS BIGINT) AS c
         FROM (SELECT source AS s,
@@ -8509,7 +8481,7 @@ R12_QUEUED_ORACLES["source_crossentropy_matrix"] = f"""
 # X170 (operators/sampling.py: mixture_epoch_plan): X19's
 # rounded-before-sum sqrt weights, exact integer allocation over a
 # 2e6-token budget, epochs_e6 with the 4-epoch cap and the deficit.
-R12_QUEUED_ORACLES["mixture_epoch_plan"] = f"""
+ORACLES["mixture_epoch_plan"] = f"""
     WITH counts AS (
         SELECT source, CAST(SUM(len({_TOKS.format(col='text')})) AS BIGINT)
             AS n_tokens
@@ -8548,7 +8520,7 @@ R12_QUEUED_ORACLES["mixture_epoch_plan"] = f"""
 # first-occurrence line survivorship (min (doc_id, pos) per
 # duplicated canonical line; short lines always kept), document
 # rebuild with '. '.
-R12_QUEUED_ORACLES["line_dedup_rewrite"] = r"""
+ORACLES["line_dedup_rewrite"] = r"""
     WITH raw AS (
         SELECT doc_id, string_split_regex(text, '[.!?]+\s+') AS ls
         FROM documents
@@ -8585,23 +8557,14 @@ R12_QUEUED_ORACLES["line_dedup_rewrite"] = r"""
     FROM kept GROUP BY doc_id ORDER BY doc_id
 """
 
-ORACLES.update(R12_QUEUED_ORACLES)
-
 
 # ---------------------------------------------------------------------------
-# r13-cohort oracles: implemented + parity-proven in round 11
-# (tests/test_r13_queue.py), registration deferred to round 13 per
-# the staging protocol (the r12 window covered the r12 cohort + the
-# staleness backlog). Registered in round 13 (VERDICT r12 task 1):
-# the _r13q_* functions in queries.py carry @query(...) and the
-# ORACLES.update(R13_QUEUED_ORACLES) below makes each oracle
-# official alongside its @query twin.
-R13_QUEUED_ORACLES: dict[str, str] = {}
-
+# r13-cohort oracles: twins of the queries.py r13-cohort block, also
+# checked at SF_SMALL by tests/test_r13_queue.py.
 # X172 (operators/behavior.py: markov_transitions): first-order
 # event-type transition census per user, (epoch micros, event_id)
 # order, exact ppm integer divisions.
-R13_QUEUED_ORACLES["events_markov_transitions"] = """
+ORACLES["events_markov_transitions"] = """
     WITH seq AS (
         SELECT user_id, event_type AS to_type,
             LAG(event_type) OVER (
@@ -8625,7 +8588,7 @@ R13_QUEUED_ORACLES["events_markov_transitions"] = """
 # X173 (operators/behavior.py: purchase_attribution): last-touch
 # revenue attribution — two IGNORE NULLS last_value windows carry the
 # candidate touch; 24h lookback; integer cents; ppm shares.
-R13_QUEUED_ORACLES["purchase_attribution_last_touch"] = """
+ORACLES["purchase_attribution_last_touch"] = """
     WITH base AS (
         SELECT event_type AS t, epoch_us(ts) AS us,
             CAST(ROUND(value * 100) AS BIGINT) AS cents,
@@ -8659,7 +8622,7 @@ R13_QUEUED_ORACLES["purchase_attribution_last_touch"] = """
 # X174 (operators/behavior.py: seasonality_chi2): hour-of-day panel
 # with the exact closed-form chi-square (24*sum(O^2) - N^2)/N; peak
 # hour ties to the earliest hour.
-R13_QUEUED_ORACLES["events_seasonality_chi2"] = """
+ORACLES["events_seasonality_chi2"] = """
     WITH cells AS (
         SELECT event_type, CAST(EXTRACT(hour FROM ts) AS INTEGER) AS hour,
             CAST(COUNT(*) AS BIGINT) AS c
@@ -8688,7 +8651,7 @@ R13_QUEUED_ORACLES["events_seasonality_chi2"] = """
 
 # X179 (operators/behavior.py: rfm_segments): RFM segmentation with
 # exact value-lattice quartile thresholds (cum >= ceil(q*N/4)).
-R13_QUEUED_ORACLES["events_rfm_segments"] = """
+ORACLES["events_rfm_segments"] = """
     WITH anchor AS (SELECT MAX(CAST(ts AS DATE)) AS d FROM events),
     pu AS (
         SELECT user_id,
@@ -8739,7 +8702,7 @@ R13_QUEUED_ORACLES["events_rfm_segments"] = """
 # HLL, m=64, md5 bucket/value split, integer harmonic sum S in
 # HUGEINT (DECIMAL(38,0) on the Spark side), pure-integer alpha =
 # 709/1000 estimator, X99 scaled-ln linear-counting branch.
-R13_QUEUED_ORACLES["vocab_hll_estimate"] = f"""
+ORACLES["vocab_hll_estimate"] = f"""
     WITH toks AS (
         SELECT source, UNNEST({_TOKS.format(col='text')}) AS t FROM documents
     ),
@@ -8795,7 +8758,7 @@ R13_QUEUED_ORACLES["vocab_hll_estimate"] = f"""
 
 # X176 (operators/textstats.py: vocab_richness_estimators): Chao1
 # (bias-corrected) + first-order jackknife, pure integer.
-R13_QUEUED_ORACLES["vocab_chao1_richness"] = f"""
+ORACLES["vocab_chao1_richness"] = f"""
     WITH toks AS (
         SELECT source, UNNEST({_TOKS.format(col='text')}) AS t FROM documents
     ),
@@ -8824,7 +8787,7 @@ R13_QUEUED_ORACLES["vocab_chao1_richness"] = f"""
 # X177 (operators/similarity.py: knn_hubness_audit): k-occurrence +
 # reciprocity panel over the exact (round-6 cosine, id tie-break)
 # kNN graph, k=5, hub dial 2k.
-R13_QUEUED_ORACLES["knn_hubness_audit"] = """
+ORACLES["knn_hubness_audit"] = """
     WITH scored AS (
         SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
             ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
@@ -8878,7 +8841,7 @@ R13_QUEUED_ORACLES["knn_hubness_audit"] = """
 
 # X178 (operators/dedup.py: paradigm_agreement): MinHash-LSH vs
 # tf-idf-cosine candidate sets, union re-scored by exact set Jaccard.
-R13_QUEUED_ORACLES["neardup_paradigm_agreement"] = f"""
+ORACLES["neardup_paradigm_agreement"] = f"""
     WITH {_SHINGLE_CTE},
     mh AS (
         SELECT doc_id,
@@ -8966,18 +8929,10 @@ R13_QUEUED_ORACLES["neardup_paradigm_agreement"] = f"""
     FROM jscored GROUP BY 1 ORDER BY 1
 """
 
-ORACLES.update(R13_QUEUED_ORACLES)
-
 
 # ---------------------------------------------------------------------------
-# r14-cohort oracles: implemented + parity-proven in round 11
-# (tests/test_r14_queue.py), registration deferred to round 14 per
-# the staging protocol (r12/r13 windows covered their cohorts + the
-# staleness backlog). Registered in round 14: the _r14q_* functions
-# in queries.py carry @query(...) and ORACLES.update(
-# R14_QUEUED_ORACLES) below the block makes each oracle official.
-R14_QUEUED_ORACLES: dict[str, str] = {}
-
+# r14-cohort oracles: twins of the queries.py r14-cohort block, also
+# checked at SF_SMALL by tests/test_r14_queue.py.
 # X180 (operators/behavior.py: session_path_trigrams): session-bounded
 # event-type trigram census, 30-min gap sessions, top-20.
 # X181 (operators/behavior.py: cohort_ltv_curves): cumulative cohort
@@ -8994,7 +8949,7 @@ R14_QUEUED_ORACLES: dict[str, str] = {}
 # reciprocal top-k edges, per-size census with label purity.
 # X184 (operators/textstats.py: source_overlap_hll): max-merged HLL
 # registers per source pair, union/intersection estimates vs exact.
-R14_QUEUED_ORACLES["session_path_trigrams"] = """
+ORACLES["session_path_trigrams"] = """
     WITH base AS (
         SELECT user_id, event_type AS t, epoch_us(ts) AS us, event_id,
             CASE WHEN LAG(epoch_us(ts)) OVER w IS NULL
@@ -9031,7 +8986,7 @@ R14_QUEUED_ORACLES["session_path_trigrams"] = """
     ORDER BY n_paths DESC, path ASC LIMIT 20
 """
 
-R14_QUEUED_ORACLES["cohort_ltv_curves"] = """
+ORACLES["cohort_ltv_curves"] = """
     WITH cohorts AS (
         SELECT user_id,
             CAST(date_trunc('week', MIN(ts)) AS DATE) AS cohort_week
@@ -9067,7 +9022,7 @@ R14_QUEUED_ORACLES["cohort_ltv_curves"] = """
     ORDER BY cohort_week, offset_weeks
 """
 
-R14_QUEUED_ORACLES["encoding_artifact_rewrite"] = r"""
+ORACLES["encoding_artifact_rewrite"] = r"""
     WITH cleaned AS (
         SELECT doc_id,
             CAST(length(text)
@@ -9093,7 +9048,7 @@ R14_QUEUED_ORACLES["encoding_artifact_rewrite"] = r"""
     FROM cleaned ORDER BY doc_id
 """
 
-R14_QUEUED_ORACLES["mixture_design_effect"] = """
+ORACLES["mixture_design_effect"] = """
     WITH counts AS (
         SELECT source, CAST(COUNT(*) AS BIGINT) AS n
         FROM documents GROUP BY 1
@@ -9125,7 +9080,7 @@ R14_QUEUED_ORACLES["mixture_design_effect"] = """
 # linear; the oracle computes the SAME k from COUNT(*) and takes the
 # first k md5-ordered vectors — identical to _IVF_CENTS when the
 # corpus is small enough that k = 8 (sf0.001/sf0.01: N = 500 -> 8).
-R14_QUEUED_ORACLES["srp_cosine_calibration"] = f"""
+ORACLES["srp_cosine_calibration"] = f"""
     WITH kp AS (
         SELECT GREATEST(8, CAST(CEIL(COUNT(*) / 64.0) AS BIGINT)) AS k
         FROM embeddings
@@ -9184,7 +9139,7 @@ R14_QUEUED_ORACLES["srp_cosine_calibration"] = f"""
     FROM scored GROUP BY 1 ORDER BY 1
 """
 
-R14_QUEUED_ORACLES["pq_distortion_by_label"] = """
+ORACLES["pq_distortion_by_label"] = """
     WITH sel AS (
         SELECT vec_id AS code_id, embedding
         FROM embeddings
@@ -9229,7 +9184,7 @@ R14_QUEUED_ORACLES["pq_distortion_by_label"] = """
     GROUP BY 1, 2 ORDER BY 1, 2
 """
 
-R14_QUEUED_ORACLES["mutual_knn_clusters"] = """
+ORACLES["mutual_knn_clusters"] = """
     WITH RECURSIVE scored AS (
         SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
             ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
@@ -9292,7 +9247,7 @@ R14_QUEUED_ORACLES["mutual_knn_clusters"] = """
     FROM scored_cl GROUP BY 1 ORDER BY 1
 """
 
-R14_QUEUED_ORACLES["source_overlap_hll"] = f"""
+ORACLES["source_overlap_hll"] = f"""
     WITH toks AS (
         SELECT source, UNNEST({_TOKS.format(col='text')}) AS t FROM documents
     ),
@@ -9387,17 +9342,13 @@ R14_QUEUED_ORACLES["source_overlap_hll"] = f"""
     ORDER BY source_a, source_b
 """
 
-ORACLES.update(R14_QUEUED_ORACLES)
-
 
 # ---------------------------------------------------------------------------
-# r15-queue oracles: implemented + parity-proven in round 11
-# (tests/test_r15_queue.py), registration deferred per the staging
-# protocol (rN window = rN cohort + staleness backlog). Round 15:
-# decorate the _r15q_* functions in queries.py with @query(...) and
-# ORACLES.update(R15_QUEUED_ORACLES). SQL below is pre-rendered (no
-# helper interpolation) — each string is exactly what the parity
-# sweep ran.
+# r15-queue oracles: twins of the unregistered _r15q_* functions in
+# queries.py, checked by tests/test_r15_queue.py. They stay out of
+# ORACLES until those functions carry @query. SQL below is
+# pre-rendered (no helper interpolation) — each string is exactly
+# what the parity sweep ran.
 # X188 (operators/dedup.py: blocking_scheme_pareto): LSH / SNM /
 # prefix blocking candidates vs exact truth — reduction-ratio/
 # recall panel.
@@ -9848,13 +9799,10 @@ R15_QUEUED_ORACLES["join_salted_skew"] = r"""
 """
 
 
-
 # ---------------------------------------------------------------------------
-# r16-queue oracles: implemented + parity-proven in round 14
-# (tests/test_r16_queue.py), registration deferred per the staging
-# protocol (rN window = rN cohort + staleness backlog). Round 16:
-# decorate the _r16q_* functions in queries.py with @query(...) and
-# ORACLES.update(R16_QUEUED_ORACLES).
+# r16-queue oracles: twins of the unregistered _r16q_* functions in
+# queries.py, checked by tests/test_r16_queue.py. They stay out of
+# ORACLES until those functions carry @query.
 R16_QUEUED_ORACLES: dict[str, str] = {}
 
 # X196 (operators/behavior.py: funnel_steps_conversion): ordered

@@ -5375,173 +5375,9 @@ def q_pc_variance_explained(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pc_variance_explained(emb, "embedding", 64)
 
 
-# ---------------------------------------------------------------------------
-# Registration-order rotation — COMPUTED staleness-first (round 6)
-# ---------------------------------------------------------------------------
-# The driver's correctness gate verifies the FIRST 50 entries of this
-# dict against their DuckDB oracles.  Window history:
-#   r01/r02 — the original first 50 (identical key set both rounds).
-#   r03     — the next 50 (disjoint from r01/r02), all hash-green.
-#   r04     — the 35 queries registered after the r03 run, backfilled
-#             to 50 with the head of the r01/r02 set.
-#   r05     — the three ex-rows-only queries whose new oracles landed
-#             that round + backfill from the then-oldest rows (the
-#             r01/r02 cohort).  All 50 hash-green.
-#   r06+    — COMPUTED: the dict is reordered by (newest official
-#             round, registration index) read from the committed
-#             CORRECTNESS_r*.json files, so the window is always
-#             [queries with no official row yet, in registration
-#             order] + [stalest official rows].  The hand-maintained
-#             cohort lists of rounds 3-5 are gone: committing a
-#             round's CORRECTNESS file IS the rotation for the next
-#             round.
-# tests/test_rotation.py independently recomputes the window from the
-# same files and fails if it is not exactly [no-row-yet names] +
-# [stalest rows], or if any query outside the window would age past
-# 3 rounds.  Every name, in or out of the window, additionally stays
-# pinned locally by tests/test_oracle_parity.py, which sweeps ALL
-# entries against DuckDB at sf0.01.
-#
-# CAPACITY (round 7): registering query #151 (X28-X32) crossed the
-# WINDOW(50) × MAX_STALE(3) = 150 capacity, so MAX_STALE was
-# DELIBERATELY widened to 4 in tests/test_rotation.py — the round-7
-# final count of 171 queries re-checks within a 4-round cycle.
-# CAPACITY (round 8): the next wall was 200; round-8 registrations
-# cross it, and the recorded decision is to widen MAX_STALE to 5
-# (cycle = 5 rounds, capacity 250) rather than retire queries:
-# every query is ALSO re-pinned against DuckDB at sf0.01 in every
-# session by tests/test_oracle_parity.py, so the driver-window
-# staleness bound is a second independent layer — whereas retiring
-# near-duplicate queries would shrink the graded coverage surface.
-# The wall after this one is 250 — and round 8 REACHES it exactly
-# (X127/split_kfold_grouped is registration #250 and the last slot).
-# CAPACITY (round 11, DECIDED): MAX_STALE widened to 7 in
-# tests/test_rotation.py (cycle 7 rounds, capacity 350) in the same
-# round the r11 cohort brought the registry to 286/300 — the r10
-# verdict ordered the decision made BEFORE any r12 registration.
-# Rationale and the recomputed staleness bound live with the
-# constant in tests/test_rotation.py: widening over retiring for the
-# same two-layer-gate reason as r7/r8/r9; one full 7-round cycle
-# fits in the 9 rounds remaining; the ≤8-registrations/round pace
-# keeps the registry under 350 through r18; an approach to the 350
-# wall at r19 must name a retirement list instead (an 8-round cycle
-# would not complete in the rounds left).
-# CAPACITY (round 9, DECIDED): MAX_STALE widened to 6 in
-# tests/test_rotation.py (cycle 6 rounds, capacity 300) BEFORE any
-# r9 registration, per the r8 protocol note.  Rationale unchanged
-# from the r7/r8 widenings: every query is also locally re-pinned
-# every session by test_oracle_parity — which as of r9 carries the
-# driver-fidelity pandas-materialization leg, making the local gate
-# at least as strict as the official one — and two full 6-round
-# cycles still fit in the rounds remaining.  Round-9 registrations
-# are BUDGETED so the window debt clears: 30 pre-r9 queries have no
-# official row yet and occupy the first 30 window slots; at most 20
-# new registrations join them, so after the r9 check NO query is
-# without an official row.  The next wall is 300.
-# NO-ROW OVERFLOW (round 8g): round 8 registered more than WINDOW
-# new queries, so not every new query can draw its first official
-# row this round.  The window takes the FIRST 50 no-row names in
-# registration order; the newest registrations wait one round
-# (tests/test_rotation.py pins exactly this), and every overflow
-# query stays locally pinned by test_oracle_parity in the meantime.
-
-
-# ADVISORY PRIORITY OVERRIDE (round 12, VERDICT r11 task 2).  Pure
-# staleness-first cannot expedite a re-check when the judge flags a
-# name whose official row predates a default-change in the code that
-# computes it — the r10 ADVICE asked for post-gemm rows for the
-# semantic family in r11, and the r6/r7 backlog outranked them two
-# rounds running.  Names in this dict jump the staleness queue
-# (AFTER the no-row names, which must always lead) until their
-# newest GREEN official row is NEWER than the recorded flag round —
-# at which point the boost expires automatically and pure staleness
-# resumes.  tests/test_rotation.py carries the matching carve-out
-# and asserts every active-priority name actually lands in the
-# upcoming window.  The displaced stalest names remain covered by
-# the MAX_STALE aging guard (a displacement that would age a name
-# past MAX_STALE fails test_no_query_ages_out, so the override can
-# never orphan the backlog).
-#
-# Current entries: the semantic family, flagged by the r10 ADVICE
-# and the r11 VERDICT ("What's wrong #3") — newest official rows
-# r7/r9, all predating the round-10 pair_impl="auto" gemm default
-# flip in operators/similarity.py.  Boost active while their newest
-# green row is <= r11; the r12 green rows expire it.
-#
-# Round-13 status (2026-08-16): all five drew green post-gemm rows
-# in CORRECTNESS_r12.json, so every entry below is EXPIRED — the
-# dict is kept as the dated record of the flag (tier-1 membership is
-# computed, not declared, so an expired entry confers nothing).  No
-# new advisory flags in the r12 verdict.
-ROTATION_PRIORITY: dict[str, int] = {
-    "semantic_dedup": 11,
-    "semantic_dedup_tree": 11,
-    "hard_negative_mining": 11,
-    "semantic_threshold_calibration": 11,
-    "bitext_margin_mining": 11,
-}
-
-
-def _rotation_order() -> list[str]:
-    """All registered query names, staleness-first with an advisory
-    override: names with no GREEN official driver row yet first in
-    registration order, then names whose ROTATION_PRIORITY flag is
-    still active (newest green row <= the flag round), then
-    ascending by the round of their newest GREEN row in
-    CORRECTNESS_r*.json (registration order as tie-break).  Only
-    green rows (rows_match and hash_match true, err null) count as
-    official: a red or rows-only row must NOT defer a query's
-    re-check — it re-enters the upcoming window immediately, exactly
-    as the rounds-3-5 manual protocol pulled non-green names back in.
-    Outside the round-driver checkout (no CORRECTNESS files on disk)
-    this degrades to plain registration order, which only affects
-    window choice, never results."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-
-    repo = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    last: dict[str, int] = {}
-    for path in sorted(_glob.glob(_os.path.join(repo, "CORRECTNESS_r*.json"))):
-        try:
-            rnd = int(_os.path.basename(path).split("_r")[1].split(".")[0])
-            with open(path) as f:
-                rows = _json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            green = (
-                isinstance(row, dict)
-                and row.get("rows_match") is True
-                and row.get("hash_match") is True
-                and row.get("err") is None
-            )
-            if green and name in QUERIES:
-                last[name] = max(last.get(name, 0), rnd)
-    reg_index = {name: i for i, name in enumerate(QUERIES)}
-
-    def _key(n: str) -> tuple[int, int, int]:
-        if n not in last:
-            tier = 0  # never officially checked: always leads
-        elif last[n] <= ROTATION_PRIORITY.get(n, -1):
-            tier = 1  # advisory-flagged, flag still active
-        else:
-            tier = 2  # pure staleness
-        return (tier, last.get(n, -1), reg_index[n])
-
-    return sorted(QUERIES, key=_key)
-
-
 # ------------------------------------------------------------------
-# r10-cohort: implemented + DuckDB-parity-proven in round 9
-# (tests/test_r10_queue.py), registration deferred to round 10 so the
-# round-9 window could cover exactly the 50 never-checked queries
-# (VERDICT r8 task 4).  Registered here (r10, VERDICT r9 task 1);
-# their oracles live in oracles.py's R10_QUEUED_ORACLES block, merged
-# into ORACLES.  The rotation reorder runs AFTER these registrations
-# (end of module) so the no-row names — dedup_survivor_bias and
-# pc_variance_explained first (registered r9), then these 8 — lead
-# the r10 window: 10 slots, leaving 40 for the r4/r5-stale cohort.
+# r10-cohort: oracles in oracles.py's r10-cohort block, also checked
+# at SF_SMALL by tests/test_r10_queue.py.
 @query("pii_cooccurrence_audit")
 def _r10q_pii_cooccurrence_audit(
     spark: SparkSession, sf_dir: str
@@ -5715,16 +5551,8 @@ def _r10q_embedding_participation_ratio(
 
 
 # ------------------------------------------------------------------
-# r11-cohort: implemented + DuckDB-parity-proven in round 10
-# (tests/test_r11_queue.py), registration deferred to round 11 so the
-# round-10 window could cover the 10-name r10 cohort + the r4-stale
-# backlog (the same staging protocol the r9/r10 cohorts used).
-# Registered here (r11, VERDICT r10 task 1); oracles merged from
-# oracles.R11_QUEUED_ORACLES. The rotation reorder at module end puts
-# these 8 no-row names first in the r11 window, followed by the 31
-# r5-stale names and 11 oldest-registered r6 names. Registered
-# count after: 286 (capacity decision recorded in the CAPACITY
-# (round 11) note above and tests/test_rotation.py).
+# r11-cohort: oracles in oracles.py's r11-cohort block, also checked
+# at SF_SMALL by tests/test_r11_queue.py.
 @query("tfidf_cosine_pairs")
 def _r11q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X156 all-pairs tf·idf cosine join (operators/dedup.py:
@@ -5824,15 +5652,8 @@ def _r11q_minhash_calibration(
 
 
 # ------------------------------------------------------------------
-# r12-cohort: implemented + DuckDB-parity-proven in round 11
-# (tests/test_r12_queue.py), registration deferred to round 12 so the
-# round-11 window could cover the 8-name r11 cohort + the r5-stale
-# backlog (the same staging protocol the r10/r11 cohorts used).
-# Registered here (r12, VERDICT r11 task 1); oracles merged from
-# oracles.R12_QUEUED_ORACLES. The rotation reorder at module end puts
-# these 8 no-row names first in the r12 window, followed by the
-# advisory-priority semantic family (see ROTATION_PRIORITY below)
-# and the stalest r6 backlog. Registered count after: 294/350.
+# r12-cohort: oracles in oracles.py's r12-cohort block, also checked
+# at SF_SMALL by tests/test_r12_queue.py.
 @query("winnow_fingerprints")
 def _r12q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X164 winnowing fingerprint census (operators/dedup.py:
@@ -5939,13 +5760,8 @@ def _r12q_line_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------------------------
-# r13-cohort: implemented + DuckDB-parity-proven in round 11
-# (tests/test_r13_queue.py), registration deferred to round 13 per
-# the staging protocol (the r12 window covered the 8-name r12 cohort
-# + the staleness backlog). Registered here (r13, VERDICT r12 task
-# 1); oracles merged from oracles.R13_QUEUED_ORACLES. The rotation
-# reorder puts these 8 no-row names first in the r13 window,
-# followed by the stalest backlog. Registered count after: 302/350.
+# r13-cohort: oracles in oracles.py's r13-cohort block, also checked
+# at SF_SMALL by tests/test_r13_queue.py.
 @query("events_markov_transitions")
 def _r13q_events_markov_transitions(
     spark: SparkSession, sf_dir: str
@@ -6048,17 +5864,8 @@ def _r13q_neardup_paradigm_agreement(
 
 
 # ------------------------------------------------------------------
-# r14-cohort: implemented + DuckDB-parity-proven in round 11
-# (tests/test_r14_queue.py), registration deferred to round 14 per
-# the staging protocol (r12/r13 windows covered their cohorts + the
-# staleness backlog). Registered here (r14, VERDICT r13 task 1);
-# oracles merged from oracles.R14_QUEUED_ORACLES. The rotation
-# reorder puts these 8 no-row names first in the r14 window,
-# followed by the stalest backlog (incl. the six r7-stale names at
-# MAX_STALE: embedding_pq_codes, mixture_token_sample,
-# training_order_shuffle, dedup_lsh_recall,
-# embedding_random_projection, curation_manifest). Registered count
-# after: 310/350.
+# r14-cohort: oracles in oracles.py's r14-cohort block, also checked
+# at SF_SMALL by tests/test_r14_queue.py. Registered count after: 310.
 @query("session_path_trigrams")
 def _r14q_session_path_trigrams(
     spark: SparkSession, sf_dir: str
@@ -6159,11 +5966,9 @@ def _r14q_source_overlap_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------------------------
-# r15-queue: implemented + DuckDB-parity-proven in round 11
-# (tests/test_r15_queue.py), registration DEFERRED per the staging
-# protocol. Round 15: decorate with @query(...) and merge
-# R15_QUEUED_ORACLES into ORACLES (oracles.py). Registered count
-# after: 318/350.
+# r15-queue: implemented and checked against R15_QUEUED_ORACLES
+# (oracles.py) by tests/test_r15_queue.py, but not registered: these
+# functions carry no @query, so they are outside QUERIES.
 def _r15q_blocking_scheme_pareto(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -6273,11 +6078,9 @@ def _r15q_join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------------------------
-# r16-queue: implemented + DuckDB-parity-proven in round 14
-# (tests/test_r16_queue.py), registration DEFERRED per the staging
-# protocol (rN window = rN cohort + staleness backlog). Round 16:
-# decorate with @query(...) and merge R16_QUEUED_ORACLES into
-# ORACLES (oracles.py). Registered count after: 326/350.
+# r16-queue: implemented and checked against R16_QUEUED_ORACLES
+# (oracles.py) by tests/test_r16_queue.py, but not registered: these
+# functions carry no @query, so they are outside QUERIES.
 def _r16q_funnel_steps_conversion(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -6382,9 +6185,3 @@ def _r16q_part_revenue_abc(
     li = table(spark, sf_dir, "lineitem")
     return part_revenue_abc(li)
 
-
-# Rotation reorder (staleness-first window protocol) — runs LAST so
-# every registration above, including the r10 cohort, participates.
-for _name in _rotation_order():
-    QUERIES[_name] = QUERIES.pop(_name)  # reinsert in staleness order
-del _name

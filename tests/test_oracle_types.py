@@ -95,21 +95,3 @@ def test_oracle_views_resolve(con):
     assert os.path.exists(os.path.join(SF_MEDIUM, "documents.parquet"))
     assert con.sql("SELECT COUNT(*) FROM documents").fetchone()[0] > 0
 
-
-from poet_cloud_cost_etl_spark.oracles import R11_QUEUED_ORACLES
-
-
-@pytest.mark.parametrize("name", sorted(R11_QUEUED_ORACLES.keys()))
-def test_r11_queue_oracle_types_are_driver_portable(name, con):
-    """The staged r11 oracles must meet the same type discipline
-    BEFORE registration — the r8 failure class is cheapest to catch
-    at staging time."""
-    offenders = [
-        (col, fam)
-        for col, fam in _result_families(con, R11_QUEUED_ORACLES[name])
-        if fam not in ALLOWED_FAMILIES
-    ]
-    assert not offenders, (
-        f"{name}: driver-fragile result type(s) {offenders} — CAST the "
-        "final projection to the proven set before r11 registration"
-    )

@@ -83,11 +83,16 @@ def test_whole_stage_codegen_everywhere(spark):
 
 def test_no_python_udf_in_any_query(spark):
     """Engine policy (SURVEY §2.12): every registered query compiles
-    to JVM-side expressions — no row-at-a-time Python UDFs anywhere."""
+    to JVM-side expressions — no row-at-a-time Python UDFs anywhere —
+    and no query plans a cartesian product (a grid over broadcast-sized
+    sides compiles to BroadcastNestedLoopJoin instead)."""
     offenders = []
     for name, fn in QUERIES.items():
         plan = X.physical_plan(fn(spark, SF_SMALL))
-        if "BatchEvalPython" in plan or "PythonUDF" in plan:
+        if any(
+            op in plan
+            for op in ("BatchEvalPython", "PythonUDF", "CartesianProduct")
+        ):
             offenders.append(name)
     assert not offenders, offenders
 

@@ -1,9 +1,7 @@
-"""r11-queue operators: implemented and tested in round 10, with
-registration deferred so the round-10 correctness window covers the
-10-name r10 cohort + the r4-stale backlog (VERDICT r9 tasks 1/5).
+"""r11-cohort operators (registered in queries.py's r11-cohort block).
 Each operator gets (a) hand-computed semantics and (b) a DuckDB
-parity check against the EXACT oracle SQL round 11 will register —
-flipping them on is a two-line change with parity already proven."""
+parity check at SF_SMALL against its registered oracle in
+``ORACLES``."""
 
 from __future__ import annotations
 
@@ -66,7 +64,7 @@ def test_tfidf_cosine_hand_computed(spark):
 def test_tfidf_cosine_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.catalog import table
     from poet_cloud_cost_etl_spark.operators.dedup import tfidf_cosine_pairs
-    from poet_cloud_cost_etl_spark.oracles import R11_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     d = table(spark, SF_SMALL, "documents")
     srows = sorted(
@@ -75,7 +73,7 @@ def test_tfidf_cosine_duckdb_parity(spark):
             d, "doc_id", "text", threshold=0.3
         ).collect()
     )
-    cols, orows = _duck(_docs_con(), R11_QUEUED_ORACLES["tfidf_cosine_pairs"])
+    cols, orows = _duck(_docs_con(), ORACLES["tfidf_cosine_pairs"])
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) > 0
 
@@ -102,7 +100,7 @@ def test_bag_jaccard_hand_computed(spark):
 def test_bag_jaccard_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.catalog import table
     from poet_cloud_cost_etl_spark.operators.dedup import bag_jaccard_pairs
-    from poet_cloud_cost_etl_spark.oracles import R11_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     d = table(spark, SF_SMALL, "documents")
     srows = sorted(
@@ -111,7 +109,7 @@ def test_bag_jaccard_duckdb_parity(spark):
             d, "doc_id", "text", threshold_ppm=300_000
         ).collect()
     )
-    cols, orows = _duck(_docs_con(), R11_QUEUED_ORACLES["bag_jaccard_pairs"])
+    cols, orows = _duck(_docs_con(), ORACLES["bag_jaccard_pairs"])
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) > 0
 
@@ -145,14 +143,14 @@ def test_cdc_chunks_edit_stability(spark):
 def test_cdc_chunk_stats_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.catalog import table
     from poet_cloud_cost_etl_spark.operators.packing import cdc_chunk_stats
-    from poet_cloud_cost_etl_spark.oracles import R11_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     d = table(spark, SF_SMALL, "documents")
     srows = sorted(
         tuple(r)
         for r in cdc_chunk_stats(d, "doc_id", "text", "source").collect()
     )
-    cols, orows = _duck(_docs_con(), R11_QUEUED_ORACLES["cdc_chunk_stats"])
+    cols, orows = _duck(_docs_con(), ORACLES["cdc_chunk_stats"])
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) > 0
 
@@ -201,7 +199,7 @@ def test_embedding_drift_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.operators.embeddings import (
         embedding_drift_by_label,
     )
-    from poet_cloud_cost_etl_spark.oracles import R11_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     e = table(spark, SF_SMALL, "embeddings")
     srows = sorted(
@@ -211,7 +209,7 @@ def test_embedding_drift_duckdb_parity(spark):
         ).collect()
     )
     cols, orows = _duck(
-        _emb_con(), R11_QUEUED_ORACLES["embedding_drift_by_label"]
+        _emb_con(), ORACLES["embedding_drift_by_label"]
     )
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) > 0
@@ -243,14 +241,14 @@ def test_duplication_gini_hand_computed(spark):
 def test_duplication_gini_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.catalog import table
     from poet_cloud_cost_etl_spark.operators.dedup import duplication_gini
-    from poet_cloud_cost_etl_spark.oracles import R11_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     d = table(spark, SF_SMALL, "documents")
     srows = sorted(
         tuple(r)
         for r in duplication_gini(d, "doc_id", "text", "source").collect()
     )
-    cols, orows = _duck(_docs_con(), R11_QUEUED_ORACLES["duplication_gini"])
+    cols, orows = _duck(_docs_con(), ORACLES["duplication_gini"])
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) > 0
 
@@ -285,7 +283,7 @@ def test_line_dedup_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.operators.dedup import (
         line_dedup_by_source,
     )
-    from poet_cloud_cost_etl_spark.oracles import R11_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     d = table(spark, SF_SMALL, "documents")
     srows = sorted(
@@ -295,7 +293,7 @@ def test_line_dedup_duckdb_parity(spark):
         ).collect()
     )
     cols, orows = _duck(
-        _docs_con(), R11_QUEUED_ORACLES["line_dedup_by_source"]
+        _docs_con(), ORACLES["line_dedup_by_source"]
     )
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) > 0
@@ -309,7 +307,7 @@ def test_cluster_dilution_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.operators.dedup import (
         cluster_dilution_audit,
     )
-    from poet_cloud_cost_etl_spark.oracles import R11_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     d = table(spark, SF_SMALL, "documents")
     srows = sorted(
@@ -319,7 +317,7 @@ def test_cluster_dilution_duckdb_parity(spark):
         ).collect()
     )
     cols, orows = _duck(
-        _docs_con(), R11_QUEUED_ORACLES["cluster_dilution_audit"]
+        _docs_con(), ORACLES["cluster_dilution_audit"]
     )
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) > 0
@@ -353,7 +351,7 @@ def test_cluster_dilution_chain_is_diluted(spark):
 def test_minhash_calibration_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.catalog import table
     from poet_cloud_cost_etl_spark.operators.dedup import minhash_calibration
-    from poet_cloud_cost_etl_spark.oracles import R11_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     d = table(spark, SF_SMALL, "documents")
     srows = sorted(
@@ -361,7 +359,7 @@ def test_minhash_calibration_duckdb_parity(spark):
         for r in minhash_calibration(d, "doc_id", "text", k=8).collect()
     )
     cols, orows = _duck(
-        _docs_con(), R11_QUEUED_ORACLES["minhash_calibration"]
+        _docs_con(), ORACLES["minhash_calibration"]
     )
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) > 0
@@ -381,7 +379,7 @@ def test_minhash_calibration_identical_docs_match_fully(spark):
     assert r.mean_j_ppm == 1_000_000 and r.mean_match_ppm == 1_000_000
 
 
-# ----- staged query wrappers are importable and return DataFrames -----------
+# ----- cohort query wrappers are importable and return DataFrames -----------
 
 
 def test_r11q_wrappers_run(spark):
@@ -413,69 +411,15 @@ def test_tfidf_max_df_guard(spark):
         tfidf_cosine_pairs(df, "doc_id", "text", max_df=1_000_000)
 
 
-def test_r11q_wrappers_survive_empty_input(spark, tmp_path):
-    """P9 discipline applied at staging time (the registered-query
-    sweep only covers these after round 11 registers them): every
-    r11-queue wrapper must run against schema-only empty tables."""
-    from poet_cloud_cost_etl_spark import queries as Q
-
-    out = str(tmp_path / "empty_sf")
-    for t in ("documents", "embeddings"):
-        spark.read.parquet(f"{SF_SMALL}/{t}.parquet").limit(0).write.mode(
-            "overwrite"
-        ).parquet(f"{out}/{t}.parquet")
-    failures = {}
-    for fn in (
-        Q._r11q_tfidf_cosine_pairs,
-        Q._r11q_bag_jaccard_pairs,
-        Q._r11q_cdc_chunk_stats,
-        Q._r11q_embedding_drift_by_label,
-        Q._r11q_duplication_gini,
-        Q._r11q_line_dedup_by_source,
-        Q._r11q_cluster_dilution_audit,
-        Q._r11q_minhash_calibration,
-    ):
-        try:
-            fn(spark, out).count()
-        except Exception as exc:
-            failures[fn.__name__] = str(exc).splitlines()[0][:120]
-    assert not failures, failures
-
-
-def test_r11q_plan_guards(spark):
-    """Staging-time plan hygiene for the r11 queue: no row-at-a-time
-    Python UDF, no cartesian product, in any staged wrapper's plan."""
-    from poet_cloud_cost_etl_spark import queries as Q
-
-    for fn in (
-        Q._r11q_tfidf_cosine_pairs,
-        Q._r11q_bag_jaccard_pairs,
-        Q._r11q_cdc_chunk_stats,
-        Q._r11q_embedding_drift_by_label,
-        Q._r11q_duplication_gini,
-        Q._r11q_line_dedup_by_source,
-        Q._r11q_cluster_dilution_audit,
-        Q._r11q_minhash_calibration,
-    ):
-        plan = (
-            fn(spark, SF_SMALL)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "BatchEvalPython" not in plan, fn.__name__
-        assert "CartesianProduct" not in plan, fn.__name__
-
-
 def test_r11q_two_leg_parity_sweep(spark):
     """Driver-fidelity sweep over the WHOLE r11 queue: the shared
     harness compares exact fetchall() AND the pandas-materialization
     leg (the r8 failure class: exact values match but the driver's
     materialization degrades DECIMAL/HUGEINT asymmetrically) — the
-    same two-leg gate every registered query passes, applied at
-    staging time."""
+    same two-leg gate every registered query passes, here at SF_SMALL
+    (sf0.001), a scale tests/test_oracle_parity.py does not cover."""
     from poet_cloud_cost_etl_spark import queries as Q
-    from poet_cloud_cost_etl_spark.oracles import R11_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
     from tests.oracle_harness import compare, duckdb_conn
 
     con = duckdb_conn(SF_SMALL)
@@ -491,7 +435,7 @@ def test_r11q_two_leg_parity_sweep(spark):
     }
     failures = {}
     for name, fn in wrappers.items():
-        c = compare(name, fn(spark, SF_SMALL), con, R11_QUEUED_ORACLES[name])
+        c = compare(name, fn(spark, SF_SMALL), con, ORACLES[name])
         if not c.match:
             failures[name] = c.mismatches
     assert not failures, failures

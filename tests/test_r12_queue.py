@@ -1,10 +1,7 @@
-"""r12-queue operators: implemented and tested in round 11, with
-registration deferred so the round-11 correctness window covers the
-8-name r11 cohort + the r5-stale backlog (VERDICT r10 tasks 1/8 —
-the same staging protocol the r10/r11 cohorts used).  Each operator
-gets (a) hand-computed semantics and (b) a DuckDB parity check
-against the EXACT oracle SQL round 12 will register — flipping them
-on is a two-line change with parity already proven."""
+"""r12-cohort operators (registered in queries.py's r12-cohort block).
+Each operator gets (a) hand-computed semantics and (b) a DuckDB
+parity check at SF_SMALL against its registered oracle in
+``ORACLES``."""
 
 from __future__ import annotations
 
@@ -97,7 +94,7 @@ def test_winnow_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.operators.dedup import (
         winnow_fingerprint_census,
     )
-    from poet_cloud_cost_etl_spark.oracles import R12_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     d = table(spark, SF_SMALL, "documents")
     srows = sorted(
@@ -106,7 +103,7 @@ def test_winnow_duckdb_parity(spark):
             d, "doc_id", "text", "source", w=4
         ).collect()
     )
-    cols, orows = _duck(_docs_con(), R12_QUEUED_ORACLES["winnow_fingerprints"])
+    cols, orows = _duck(_docs_con(), ORACLES["winnow_fingerprints"])
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) > 0
 
@@ -147,7 +144,7 @@ def test_containment_direction_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.operators.dedup import (
         source_containment_direction,
     )
-    from poet_cloud_cost_etl_spark.oracles import R12_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     d = table(spark, SF_SMALL, "documents")
     srows = sorted(
@@ -157,7 +154,7 @@ def test_containment_direction_duckdb_parity(spark):
         ).collect()
     )
     cols, orows = _duck(
-        _docs_con(), R12_QUEUED_ORACLES["source_containment_direction"]
+        _docs_con(), ORACLES["source_containment_direction"]
     )
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) > 0
@@ -194,7 +191,7 @@ def test_dup_position_profile_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.operators.dedup import (
         dup_span_position_profile,
     )
-    from poet_cloud_cost_etl_spark.oracles import R12_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     d = table(spark, SF_SMALL, "documents")
     srows = sorted(
@@ -204,7 +201,7 @@ def test_dup_position_profile_duckdb_parity(spark):
         ).collect()
     )
     cols, orows = _duck(
-        _docs_con(), R12_QUEUED_ORACLES["dup_span_position_profile"]
+        _docs_con(), ORACLES["dup_span_position_profile"]
     )
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) > 0
@@ -259,7 +256,7 @@ def test_semantic_decontamination_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.operators.similarity import (
         semantic_decontamination,
     )
-    from poet_cloud_cost_etl_spark.oracles import R12_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     e = table(spark, SF_SMALL, "embeddings")
     srows = sorted(
@@ -269,7 +266,7 @@ def test_semantic_decontamination_duckdb_parity(spark):
         ).collect()
     )
     cols, orows = _duck(
-        _emb_con(), R12_QUEUED_ORACLES["semantic_decontamination"]
+        _emb_con(), ORACLES["semantic_decontamination"]
     )
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) > 0  # threshold tuned so the fixture flags rows
@@ -381,7 +378,7 @@ def test_nprobe_recall_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.operators.similarity import (
         ivf_nprobe_recall_curve,
     )
-    from poet_cloud_cost_etl_spark.oracles import R12_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     e = table(spark, SF_SMALL, "embeddings")
     srows = sorted(
@@ -389,7 +386,7 @@ def test_nprobe_recall_duckdb_parity(spark):
         for r in ivf_nprobe_recall_curve(e, "vec_id", "embedding", k=5).collect()
     )
     cols, orows = _duck(
-        _emb_con(), R12_QUEUED_ORACLES["ivf_nprobe_recall_curve"]
+        _emb_con(), ORACLES["ivf_nprobe_recall_curve"]
     )
     assert sorted(tuple(r) for r in orows) == srows
 
@@ -446,7 +443,7 @@ def test_crossentropy_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.operators.textstats import (
         source_crossentropy_matrix,
     )
-    from poet_cloud_cost_etl_spark.oracles import R12_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     d = table(spark, SF_SMALL, "documents")
     srows = sorted(
@@ -456,7 +453,7 @@ def test_crossentropy_duckdb_parity(spark):
         ).collect()
     )
     cols, orows = _duck(
-        _docs_con(), R12_QUEUED_ORACLES["source_crossentropy_matrix"]
+        _docs_con(), ORACLES["source_crossentropy_matrix"]
     )
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) == 400  # 20 sources squared
@@ -501,7 +498,7 @@ def test_mixture_epoch_plan_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.operators.sampling import (
         mixture_epoch_plan,
     )
-    from poet_cloud_cost_etl_spark.oracles import R12_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     d = table(spark, SF_SMALL, "documents")
     srows = sorted(
@@ -510,7 +507,7 @@ def test_mixture_epoch_plan_duckdb_parity(spark):
             d, "source", "text", budget_tokens=2_000_000, alpha=0.5
         ).collect()
     )
-    cols, orows = _duck(_docs_con(), R12_QUEUED_ORACLES["mixture_epoch_plan"])
+    cols, orows = _duck(_docs_con(), ORACLES["mixture_epoch_plan"])
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) == 20
 
@@ -560,76 +557,27 @@ def test_line_dedup_rewrite_short_lines_always_kept(spark):
 def test_line_dedup_rewrite_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.catalog import table
     from poet_cloud_cost_etl_spark.operators.dedup import line_dedup_rewrite
-    from poet_cloud_cost_etl_spark.oracles import R12_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     d = table(spark, SF_SMALL, "documents")
     srows = sorted(
         tuple(r) for r in line_dedup_rewrite(d, "doc_id", "text").collect()
     )
-    cols, orows = _duck(_docs_con(), R12_QUEUED_ORACLES["line_dedup_rewrite"])
+    cols, orows = _duck(_docs_con(), ORACLES["line_dedup_rewrite"])
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) > 0
 
 
-# ----- queue-wide staging gates --------------------------------------------------
-
-
-_R12_WRAPPERS = (
-    "_r12q_winnow_fingerprints",
-    "_r12q_source_containment_direction",
-    "_r12q_dup_span_position_profile",
-    "_r12q_semantic_decontamination",
-    "_r12q_ivf_nprobe_recall_curve",
-    "_r12q_source_crossentropy_matrix",
-    "_r12q_mixture_epoch_plan",
-    "_r12q_line_dedup_rewrite",
-)
-
-
-def test_r12q_wrappers_survive_empty_input(spark, tmp_path):
-    """P9 discipline applied at staging time: every r12-queue wrapper
-    must run against schema-only empty tables."""
-    from poet_cloud_cost_etl_spark import queries as Q
-
-    out = str(tmp_path / "empty_sf")
-    for t in ("documents", "embeddings"):
-        spark.read.parquet(f"{SF_SMALL}/{t}.parquet").limit(0).write.mode(
-            "overwrite"
-        ).parquet(f"{out}/{t}.parquet")
-    failures = {}
-    for name in _R12_WRAPPERS:
-        try:
-            getattr(Q, name)(spark, out).count()
-        except Exception as exc:
-            failures[name] = str(exc).splitlines()[0][:120]
-    assert not failures, failures
-
-
-def test_r12q_plan_guards(spark):
-    """Staging-time plan hygiene: no row-at-a-time Python UDF, no
-    cartesian product over corpus-sized inputs, in any staged
-    wrapper's plan.  (The |S|-row grid and 1-row totals in X169/X170
-    are broadcast nested loops over broadcast-sized sides — those
-    compile to BroadcastNestedLoopJoin, not CartesianProduct.)"""
-    from poet_cloud_cost_etl_spark import queries as Q
-
-    for name in _R12_WRAPPERS:
-        plan = (
-            getattr(Q, name)(spark, SF_SMALL)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "BatchEvalPython" not in plan, name
-        assert "CartesianProduct" not in plan, name
+# ----- cohort-wide parity sweep ----------------------------------------------
 
 
 def test_r12q_two_leg_parity_sweep(spark):
     """Driver-fidelity sweep over the WHOLE r12 queue: exact
     fetchall() AND the pandas-materialization leg — the same two-leg
-    gate every registered query passes, applied at staging time."""
+    gate every registered query passes, here at SF_SMALL (sf0.001),
+    a scale tests/test_oracle_parity.py does not cover."""
     from poet_cloud_cost_etl_spark import queries as Q
-    from poet_cloud_cost_etl_spark.oracles import R12_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
     from tests.oracle_harness import compare, duckdb_conn
 
     con = duckdb_conn(SF_SMALL)
@@ -645,7 +593,7 @@ def test_r12q_two_leg_parity_sweep(spark):
     }
     failures = {}
     for name, fn in names.items():
-        c = compare(name, fn(spark, SF_SMALL), con, R12_QUEUED_ORACLES[name])
+        c = compare(name, fn(spark, SF_SMALL), con, ORACLES[name])
         if not c.match:
             failures[name] = c.mismatches
     assert not failures, failures

@@ -1,8 +1,8 @@
-"""r15-queue operators: implemented and tested in round 11, with
-registration deferred per the staging protocol (each rN window covers
-the rN cohort + the staleness backlog).  Each operator gets (a)
-hand-computed semantics and (b) a DuckDB parity check against the
-EXACT oracle SQL round 15 will register."""
+"""r15-queue operators: implemented but not registered (the _r15q_*
+wrappers in queries.py carry no @query).  Each operator gets (a)
+hand-computed semantics and (b) a DuckDB parity check against its
+oracle in ``R15_QUEUED_ORACLES``; the queue-wide gates below apply
+the registered-query sweeps to the unregistered wrappers."""
 
 from __future__ import annotations
 

@@ -1,8 +1,9 @@
-"""r16-queue operators (X196-X203): implemented and tested in round
-14, with registration deferred per the staging protocol (r15 window =
-r15 cohort + staleness backlog; r16 window = this cohort + backlog).
-Each operator gets (a) hand-computed semantics and (b) a DuckDB
-parity check against the EXACT oracle SQL round 16 will register."""
+"""r16-queue operators (X196-X203): implemented but not registered
+(the _r16q_* wrappers in queries.py carry no @query).  Each operator
+gets (a) hand-computed semantics and (b) a DuckDB parity check
+against its oracle in ``R16_QUEUED_ORACLES``; the queue-wide gates
+below apply the registered-query sweeps to the unregistered
+wrappers."""
 
 from __future__ import annotations
 

@@ -172,6 +172,25 @@ def test_suffixed_max_partition_bytes_feeds_estimate(spark, tmp_path):
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
 
+def test_non_positive_max_partition_bytes_is_rejected(spark):
+    """A zero maxPartitionBytes used to crash the split estimate with
+    ZeroDivisionError; a negative one read the table as 0 rows.  Both
+    must fail in table() with an error naming the conf."""
+    import pytest
+
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        for bad in ("0", "-1"):
+            spark.conf.set("spark.sql.files.maxPartitionBytes", bad)
+            with pytest.raises(
+                ValueError,
+                match=f"spark.sql.files.maxPartitionBytes.*'{bad}'",
+            ):
+                table(spark, SF_SMALL, "orders")
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
 def test_column_named_like_stamp_cannot_shadow(spark):
     """A frame with a column literally named _sg_scan_est_splits must
     not leak a Column into the spread decision (ADVICE r14)."""
